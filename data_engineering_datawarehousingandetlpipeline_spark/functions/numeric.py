@@ -62,6 +62,23 @@ def davg_over(expr: Column | str, window, wide: bool = False) -> Column:
     return F.try_divide(dsum_over(col, window, wide), F.count(col).over(window))
 
 
+def binary_round(expr: Column | str, digits: int) -> Column:
+    """Round a double to ``digits`` places the way DuckDB's ``round`` does.
+
+    DuckDB scales, rounds the binary product half away from zero, and
+    unscales: ``round(x·10^d) / 10^d``. Spark's ``round(x, d)`` instead
+    rounds the shortest decimal string of ``x`` half-up, so the two split
+    on a tie whose binary value sits just below it: 4258.61 / 32 is
+    133.081563 in Spark and 133.081562 in DuckDB. Scaling first moves the
+    tie to ``n + 0.5``, which is an exact double while |x·10^d| < 2^52, so
+    a value's shortest decimal string reaches the tie only when the value
+    is the tie: both engines then round the same number the same way.
+    """
+    col = F.col(expr) if isinstance(expr, str) else expr
+    scale = 10.0**digits
+    return F.round(col * scale) / scale
+
+
 def sql_dsum(expr: str, wide: bool = False) -> str:
     """Oracle-side twin of :func:`dsum` (ANSI SQL text for DuckDB).
 

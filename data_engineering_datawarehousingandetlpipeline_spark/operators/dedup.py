@@ -27,6 +27,8 @@ Embedding-cosine near-dup lives in operators/similarity.py.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -55,10 +57,8 @@ MERSENNE_P = (1 << 31) - 1
 #: autoBroadcastJoinThreshold; raise it via env on executors with room
 #: for bigger broadcasts, or lower it for very wide id types. The
 #: shuffle path remains the fallback for early warehouse-scale rounds.
-import os as _os
-
 FRONTIER_BROADCAST_MAX_ROWS = int(
-    _os.environ.get("SPARK_GRAFT_FRONTIER_BROADCAST_MAX", "250000")
+    os.environ.get("SPARK_GRAFT_FRONTIER_BROADCAST_MAX", "250000")
 )
 
 

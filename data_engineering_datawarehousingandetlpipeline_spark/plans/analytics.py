@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from data_engineering_datawarehousingandetlpipeline_spark.functions.numeric import (
     ANCHOR_TYPE,
+    binary_round,
     davg,
     davg_over,
     dsum,
@@ -2527,7 +2528,8 @@ def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     the part filter prunes the FACT side via a broadcast semi-join
     before the aggregate, so the costed row set is already part-filtered.
     Cross-engine determinism: cost is rounded to 6 dp BEFORE the argmin,
-    so both engines tie-break identical values, never near-equal doubles.
+    so both engines tie-break identical values, never near-equal doubles;
+    :func:`binary_round` rounds exactly as the oracle's ``round`` does.
     """
     ensure_runtime_confs(spark)
     wanted = (
@@ -2541,7 +2543,7 @@ def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "left_semi",
     )
     costs = lineitem.groupBy("l_partkey", "l_suppkey").agg(
-        F.round(F.min(F.col("l_extendedprice") / F.col("l_quantity")), 6).alias(
+        binary_round(F.min(F.col("l_extendedprice") / F.col("l_quantity")), 6).alias(
             "unit_cost"
         )
     )

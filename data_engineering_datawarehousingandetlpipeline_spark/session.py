@@ -59,6 +59,28 @@ def default_parallelism() -> int:
 #: successor.
 _SPREAD_PROBE_CACHE: dict[tuple[str, int], int] = {}
 
+#: entries a per-session cache holds before :func:`evict_dead_sessions`
+#: sweeps it.
+SESSION_CACHE_LIMIT = 256
+
+
+def session_uuid(spark: SparkSession) -> str:
+    """The JVM session's UUID: a cache key that no later session reuses."""
+    return spark._jsparkSession.sessionUUID()
+
+
+def evict_dead_sessions(cache: dict, live: str) -> None:
+    """Bound a cache whose keys start with a session UUID.
+
+    Past :data:`SESSION_CACHE_LIMIT` entries, drop every key of a session
+    other than ``live`` — in practice, sessions the process has moved on
+    from. The live session keeps its entries: wiping them would make it
+    redo every probe it touches next.
+    """
+    if len(cache) > SESSION_CACHE_LIMIT:
+        for k in [k for k in cache if k[0] != live]:
+            del cache[k]
+
 
 def spread(df, parallelism: int | None = None):
     """Fan a narrow-partitioned DataFrame out to full core parallelism.
@@ -83,7 +105,7 @@ def spread(df, parallelism: int | None = None):
     target = parallelism or default_parallelism()
     try:
         key = (
-            df.sparkSession._jsparkSession.sessionUUID(),
+            session_uuid(df.sparkSession),
             df._jdf.queryExecution().analyzed().semanticHash(),
         )
     except Exception:  # pragma: no cover - connect-mode / internals drift
@@ -92,12 +114,7 @@ def spread(df, parallelism: int | None = None):
     if n is None:
         n = df.rdd.getNumPartitions()
         if key is not None:
-            if len(_SPREAD_PROBE_CACHE) > 256:  # stale-session hygiene:
-                # drop only DEAD sessions' keys — wiping the live session's
-                # entries would re-probe (re-plan) every scan it touches next.
-                live = key[0]
-                for k in [k for k in _SPREAD_PROBE_CACHE if k[0] != live]:
-                    del _SPREAD_PROBE_CACHE[k]
+            evict_dead_sessions(_SPREAD_PROBE_CACHE, key[0])
             _SPREAD_PROBE_CACHE[key] = n
     if n >= target:
         return df

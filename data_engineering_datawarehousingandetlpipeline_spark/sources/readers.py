@@ -4,17 +4,29 @@ The reference's batch source is a bundled JSON fixture
 (``src/data_processing/fmi_client.py:139-142``); its warehouse scans are SQL
 pushed to BigQuery. Here both become declarative Spark reads so Catalyst
 gets predicate pushdown + column pruning for free (SURVEY.md §4).
+
+A bare ``spark.read.parquet(path)`` runs one Spark job to read the file's
+footer and infer its schema, every time it is called. A query builds one
+scan per table it touches, so corpus reads infer each file's schema once
+per session (:func:`_read_parquet`) and hand that schema to every later
+read of the same, unchanged file; such a read starts no job.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from data_engineering_datawarehousingandetlpipeline_spark.schema import (
     OBSERVATION_SCHEMA,
     apply_schema,
+)
+from data_engineering_datawarehousingandetlpipeline_spark.session import (
+    evict_dead_sessions,
+    session_uuid,
 )
 
 #: Driver-generated corpus (TESTDATA.md) — one parquet file per table.
@@ -43,8 +55,42 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         return _load_events(spark, path)
+    return _read_parquet(spark, path)
+
+
+#: (session UUID, absolute path) → (file fingerprint, the schema Spark
+#: inferred for the file). A read hits only while the fingerprint still
+#: matches; a rewrite replaces the entry, so no stale schema survives it.
+_SCHEMA_CACHE: dict[tuple[str, str], tuple[tuple[int, int, int], StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Scan one parquet file, inferring its schema once per session.
+
+    The first read of a regular file is a plain ``spark.read.parquet``
+    (one footer job); its inferred schema is kept, keyed by session and
+    absolute path, with the file's (inode, mtime ns, size). Later reads
+    of the unchanged file pass that schema and start no job. Directories
+    and missing paths are read as plain ``spark.read.parquet`` every time.
+    The timestamp confs are pinned before the lookup, so a cached schema
+    was inferred under the same confs the read runs with.
+    """
     _pin_parquet_timestamp_confs(spark)
-    return spark.read.parquet(path)
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None  # Spark raises its own error for a missing path
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (session_uuid(spark), os.path.abspath(path))
+    fingerprint = (st.st_ino, st.st_mtime_ns, st.st_size)
+    hit = _SCHEMA_CACHE.get(key)
+    if hit is not None and hit[0] == fingerprint:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    evict_dead_sessions(_SCHEMA_CACHE, key[0])
+    _SCHEMA_CACHE[key] = (fingerprint, df.schema)
+    return df
 
 
 def _pin_parquet_timestamp_confs(spark: SparkSession) -> None:
@@ -71,8 +117,7 @@ def _pin_parquet_timestamp_confs(spark: SparkSession) -> None:
 def _load_events(spark: SparkSession, path: str, ts_range=None) -> DataFrame:
     from pyspark.sql import functions as F
 
-    _pin_parquet_timestamp_confs(spark)
-    df = spark.read.parquet(path)
+    df = _read_parquet(spark, path)
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":
         # Legacy nanos layout, read as raw int64 (nanosAsLong).
@@ -151,7 +196,12 @@ def load_events_range(
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """All corpus tables as a dict (lazy scans — nothing is read yet)."""
+    """All corpus tables as a dict of scans.
+
+    No data is read, but the first call in a session reads each file's
+    footer to infer its schema: one Spark job per table. Later calls on
+    unchanged files start no job (see :func:`_read_parquet`).
+    """
     return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
 
 

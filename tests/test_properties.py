@@ -109,6 +109,26 @@ def test_u32_hash_contract_matches_duckdb_oracle(spark):
         assert 0 <= h < (1 << 32)
 
 
+def test_binary_round_matches_duckdb_round_on_a_decimal_tie(spark):
+    """4258.61 / 32 is 133.0815625 in decimal and just below it in binary:
+    Spark's round() gives 133.081563, DuckDB's round() 133.081562.
+    binary_round must give DuckDB's answer (min_cost_supplier rests on it)."""
+    import duckdb
+
+    from pyspark.sql import functions as F
+
+    from data_engineering_datawarehousingandetlpipeline_spark.functions.numeric import (
+        binary_round,
+    )
+
+    df = spark.createDataFrame([(4258.61, 32.0)], "p double, q double")
+    got_spark = df.select(binary_round(F.col("p") / F.col("q"), 6)).first()[0]
+    got_duckdb = duckdb.connect().execute(
+        "SELECT round(CAST(4258.61 AS DOUBLE) / CAST(32 AS DOUBLE), 6)"
+    ).fetchone()[0]
+    assert got_spark == got_duckdb == 133.081562
+
+
 @settings(max_examples=500)
 @given(st.text(max_size=400))
 def test_bpe_split_is_lossless_modulo_whitespace(s):
