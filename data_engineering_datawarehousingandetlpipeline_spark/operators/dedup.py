@@ -667,10 +667,8 @@ def simhash_fingerprints(
     ±1 array per token (``transform`` over a ``sequence``) and then zipped
     it into the accumulator, allocating twice per token for identical
     integer arithmetic. Measured on the sf0.1 fingerprint scan: ~0.93 →
-    ~0.85 s warm, 5.8 → 4.8 s first execution (the smaller expression also
-    JIT-compiles faster, which is the regime the interleaved bench runs
-    in); per-element values bit-identical (asserted by sorted-collect
-    compare).
+    ~0.85 s warm, 5.8 → 4.8 s first execution; per-element values
+    bit-identical (asserted by sorted-collect compare).
     """
     powers = F.array(*[F.lit(1 << i).cast("bigint") for i in range(bits)])
     # NULL-text docs are dropped (not emitted with a NULL fingerprint):

@@ -1013,14 +1013,14 @@ def _near_dup_tagged(
     corpus_rows: int | None,
     target_bucket_size: int,
     auto_count_limit: int,
+    stats: dict | None = None,
 ) -> DataFrame:
     """(vid, tbl, bucket) LSH bucket tags, one row per vector per table.
 
     The sizing / plane-count-derivation seam of
-    :func:`embedding_near_dup_pairs` (docstring there). Split out (r16)
-    so the derived plane count stays observable in an analyzed plan: the
-    caller pins the result with ``localCheckpoint``, which hides the
-    bucket expression behind a Scan ExistingRDD in the final query plan.
+    :func:`embedding_near_dup_pairs` (docstring there), which pins the
+    result with ``localCheckpoint``. Pass ``stats`` to receive the
+    resolved plane count back as ``{"n_planes": n}``.
     """
     if n_planes is None:
         if corpus_rows is None:
@@ -1047,6 +1047,8 @@ def _near_dup_tagged(
                     "n_planes."
                 )
         n_planes = planes_for_corpus(corpus_rows, target_bucket_size)
+    if stats is not None:
+        stats["n_planes"] = n_planes
     table_planes = [
         [hyperplane(t * n_planes + b, dim) for b in range(n_planes)]
         for t in range(n_tables)
@@ -1114,9 +1116,9 @@ def embedding_near_dup_pairs(
     vectors and filtered by exact rounded cosine — verify work is
     O(distinct candidates). Output (id_a, id_b, cos_sim), id_a < id_b.
     """
-    # Sizing + bucket tagging live in the pre-pin seam so the plane-count
-    # derivation stays observable in an analyzed plan (the pin below hides
-    # the bucket expression behind a Scan ExistingRDD).
+    # Sizing + bucket tagging live in the pre-pin seam, which can report
+    # the resolved plane count (the pin below hides the bucket expression
+    # behind a Scan ExistingRDD).
     tagged = _near_dup_tagged(
         df,
         n_planes=n_planes,

@@ -116,8 +116,6 @@ def test_near_dup_planes_derive_from_corpus_size(spark):
     (explicit ``corpus_rows`` hint, else a one-time count), so a bigger
     corpus gets more planes end-to-end — the property that keeps bucket
     occupancy (and the within-bucket self-join) bounded at 100 TB."""
-    from pyspark.sql import functions as F
-
     from data_engineering_datawarehousingandetlpipeline_spark.operators import (
         similarity as sim,
     )
@@ -127,18 +125,12 @@ def test_near_dup_planes_derive_from_corpus_size(spark):
 
     embs = _embs(spark, SF_DIR)
 
-    def bucket_legs(df):
-        # each hyperplane contributes one CASE WHEN leg to the bucket
-        # expression — count them in the analyzed plan as the end-to-end
-        # observable of the resolved plane count.
-        return df._jdf.queryExecution().analyzed().toString().count("CASE WHEN")
-
-    # Since r16 the public operator pins the tagged-bucket table
-    # (localCheckpoint shared by both self-join sides), which hides the
-    # bucket expression behind a Scan ExistingRDD — gate the derivation on
-    # the pre-pin seam the operator actually calls (same code path).
-    def tagged(**kw):
-        return sim._near_dup_tagged(
+    # gate the derivation on the resolved plane count the pre-pin seam
+    # reports (the public operator pins the tagged table, which hides the
+    # bucket expression behind a Scan ExistingRDD)
+    def planes(**kw):
+        stats = {}
+        sim._near_dup_tagged(
             embs,
             n_planes=None,
             n_tables=4,
@@ -147,12 +139,12 @@ def test_near_dup_planes_derive_from_corpus_size(spark):
             vec_col="embedding",
             target_bucket_size=64,
             auto_count_limit=1_000_000,
+            stats=stats,
             **kw,
         )
+        return stats["n_planes"]
 
-    small = tagged(corpus_rows=1_000)
-    large = tagged(corpus_rows=1_000_000)
-    assert bucket_legs(large) > bucket_legs(small)
+    assert planes(corpus_rows=1_000_000) > planes(corpus_rows=1_000)
 
     # the public operator routes through the seam and pins its result:
     # the pinned table is what both self-join sides scan
@@ -166,9 +158,8 @@ def test_near_dup_planes_derive_from_corpus_size(spark):
     # over-limit refusal never pays a full scan) sizes the index the same
     # way the equivalent explicit hint would — and warns about the scan
     with pytest.warns(UserWarning, match="eager sizing count"):
-        counted = tagged(corpus_rows=None)
-    hinted = tagged(corpus_rows=embs.count())
-    assert bucket_legs(counted) == bucket_legs(hinted)
+        counted = planes(corpus_rows=None)
+    assert counted == planes(corpus_rows=embs.count())
 
     # past the auto-count limit the bare form fails LOUDLY instead of
     # silently re-scanning a warehouse-sized corpus on every invocation

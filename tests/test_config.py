@@ -6,6 +6,7 @@ from data_engineering_datawarehousingandetlpipeline_spark.config import (
     DEFAULT_STATION_WHITELIST,
     load_config,
 )
+from tests.conftest import SF_DIR
 
 
 def test_defaults(monkeypatch):
@@ -55,3 +56,36 @@ def test_spread_probe_is_cached_per_plan(spark):
     assert S._SPREAD_PROBE_CACHE == cached  # second probe answered from cache
     # identical decision both times: a tiny file fans out to full parallelism
     assert out1.rdd.getNumPartitions() == out2.rdd.getNumPartitions()
+
+
+def test_warm_tpch_round_compiles_no_classes(spark):
+    """Spark caches generated classes in an LRU of
+    ``spark.sql.codegen.cache.maxEntries``. One round of the 22 TPC-H
+    shapes compiles ~300 distinct classes, more than the 100-entry default,
+    so at the default every repeat round recompiled every class. With the
+    session's cache sized to the working set, a repeat compiles nothing."""
+    from data_engineering_datawarehousingandetlpipeline_spark.plans.registry import (
+        TPCH_SHAPES,
+        all_queries,
+    )
+    from data_engineering_datawarehousingandetlpipeline_spark.session import (
+        CODEGEN_CACHE_MAX_ENTRIES,
+    )
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        CODEGEN_CACHE_MAX_ENTRIES
+    )
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = codegen.METRIC_COMPILATION_TIME()  # one count per class compiled
+    queries = all_queries()
+    frames = [queries[name].fn(spark, SF_DIR) for name in TPCH_SHAPES]
+
+    def noop_round():
+        for df in frames:
+            df.write.mode("overwrite").format("noop").save()
+
+    noop_round()
+    before = compiled.getCount()
+    noop_round()
+    recompiled = compiled.getCount() - before
+    assert recompiled == 0, f"warm round recompiled {recompiled} classes"
