@@ -1746,43 +1746,12 @@ RRF_TOP_K = 5
 RRF_SCALE = 9
 
 
-def q_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hybrid more-like-this retrieval: RRF over dense ⊕ lexical rankings.
-
-    For each query document (``doc_id < 3``, whose embedding row shares
-    the id), two independent rankings are produced — exact cosine top-10
-    over the embedding table, and BM25 top-10 where the query terms are
-    the document's own distinct tokens (query-by-example, self excluded) —
-    then fused by reciprocal-rank fusion: score(d) = Σ_modality
-    1/(60 + rank_modality(d)), the standard ranker-agnostic hybrid that
-    needs no score calibration between modalities.
-
-    Scale shape: both sides keep their own audited plans (corpus ×
-    broadcast(queries) scan for dense; pinned postings + broadcast query
-    model for lexical — :func:`bm25_ranking`), each already bounded to
-    RRF_POOL rows per query BEFORE the fusion join, so the full-outer
-    fusion joins two ≤ |queries|·pool row sets — trivially small at any
-    corpus size. Rank arithmetic on integers is engine-exact; the fused
-    score is rounded before ranking; ties rank by doc_id asc.
-    """
+def _rrf_fuse(dense: DataFrame, lex: DataFrame) -> DataFrame:
+    """Reciprocal-rank fusion of the per-query ``dense`` (rank_dense) and
+    ``lex`` (rank_lex) pools, keyed by (query_id, doc_id): top RRF_TOP_K
+    per query; a doc missing from one pool scores 0 for that modality."""
     from pyspark.sql import Window
 
-    docs = _docs(spark, sf_dir)
-    embs = _embs(spark, sf_dir)
-    dense = sim.cosine_top_k(
-        embs, embs.filter(F.col("vec_id") < RRF_QUERY_DOCS), k=RRF_POOL
-    ).select(
-        F.col("query_id").cast("int").alias("query_id"),
-        F.col("neighbor_id").alias("doc_id"),
-        F.col("rank").cast("int").alias("rank_dense"),
-    )
-    qterms = docs.filter(F.col("doc_id") < RRF_QUERY_DOCS).select(
-        F.col("doc_id").cast("int").alias("query_id"),
-        F.explode(F.array_distinct(tx.tokens(F.col("text")))).alias("term"),
-    )
-    lex = bm25_ranking(docs, qterms, RRF_POOL, exclude_self=True).select(
-        "query_id", "doc_id", F.col("rank").cast("int").alias("rank_lex")
-    )
     fused = dense.join(lex, ["query_id", "doc_id"], "full_outer").select(
         "query_id",
         "doc_id",
@@ -1814,6 +1783,44 @@ def q_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("query_id", "rank")
     )
+
+
+def q_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hybrid more-like-this retrieval: RRF over dense ⊕ lexical rankings.
+
+    For each query document (``doc_id < 3``, whose embedding row shares
+    the id), two independent rankings are produced — exact cosine top-10
+    over the embedding table, and BM25 top-10 where the query terms are
+    the document's own distinct tokens (query-by-example, self excluded) —
+    then fused by reciprocal-rank fusion: score(d) = Σ_modality
+    1/(60 + rank_modality(d)), the standard ranker-agnostic hybrid that
+    needs no score calibration between modalities.
+
+    Scale shape: both sides keep their own audited plans (corpus ×
+    broadcast(queries) scan for dense; pinned postings + broadcast query
+    model for lexical — :func:`bm25_ranking`), each already bounded to
+    RRF_POOL rows per query BEFORE the fusion join, so the full-outer
+    fusion joins two ≤ |queries|·pool row sets — trivially small at any
+    corpus size. Rank arithmetic on integers is engine-exact; the fused
+    score is rounded before ranking; ties rank by doc_id asc.
+    """
+    docs = _docs(spark, sf_dir)
+    embs = _embs(spark, sf_dir)
+    dense = sim.cosine_top_k(
+        embs, embs.filter(F.col("vec_id") < RRF_QUERY_DOCS), k=RRF_POOL
+    ).select(
+        F.col("query_id").cast("int").alias("query_id"),
+        F.col("neighbor_id").alias("doc_id"),
+        F.col("rank").cast("int").alias("rank_dense"),
+    )
+    qterms = docs.filter(F.col("doc_id") < RRF_QUERY_DOCS).select(
+        F.col("doc_id").cast("int").alias("query_id"),
+        F.explode(F.array_distinct(tx.tokens(F.col("text")))).alias("term"),
+    )
+    lex = bm25_ranking(docs, qterms, RRF_POOL, exclude_self=True).select(
+        "query_id", "doc_id", F.col("rank").cast("int").alias("rank_lex")
+    )
+    return _rrf_fuse(dense, lex)
 
 
 def _sql_retrieval_rrf() -> str:
@@ -2469,8 +2476,6 @@ def q_retrieval_rrf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     is bounded separately by the recall@5 ≥ 0.8 gate vs the exact fusion
     (tests/test_ann_recall.py). (r7 verdict, marching order 3.)
     """
-    from pyspark.sql import Window
-
     docs = _docs(spark, sf_dir)
     embs = _embs(spark, sf_dir)
     dense = sim.cosine_top_k_ivf(
@@ -2492,40 +2497,7 @@ def q_retrieval_rrf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     lex = bm25_ranking(docs, qterms, RRF_POOL, exclude_self=True).select(
         "query_id", "doc_id", F.col("rank").cast("int").alias("rank_lex")
     )
-    # fusion arithmetic kept textually identical to q_retrieval_rrf's —
-    # inlined rather than shared so the exact twin's r7-verified plan
-    # stays untouched.
-    fused = dense.join(lex, ["query_id", "doc_id"], "full_outer").select(
-        "query_id",
-        "doc_id",
-        "rank_dense",
-        "rank_lex",
-        F.round(
-            F.coalesce(
-                F.lit(1.0) / (F.lit(RRF_K) + F.col("rank_dense")), F.lit(0.0)
-            )
-            + F.coalesce(
-                F.lit(1.0) / (F.lit(RRF_K) + F.col("rank_lex")), F.lit(0.0)
-            ),
-            RRF_SCALE,
-        ).alias("rrf_score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("rrf_score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        fused.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= RRF_TOP_K)
-        .select(
-            "query_id",
-            "doc_id",
-            "rank_dense",
-            "rank_lex",
-            "rrf_score",
-            F.col("rank").cast("int").alias("rank"),
-        )
-        .orderBy("query_id", "rank")
-    )
+    return _rrf_fuse(dense, lex)
 
 
 def _sql_retrieval_rrf_ann() -> str:
@@ -3489,10 +3461,6 @@ ORDER BY doc_id, copy_id
 
 
 QUERIES = [
-    # Driver-window placement is governed by registry.WINDOW_HEAD, not by
-    # position in this list — register new queries there as well (new or
-    # changed queries MUST sit inside the first 50 registry entries or
-    # they get no per-round driver correctness row).
     QuerySpec("doc_ngram_topk", q_doc_ngram_topk, SQL_DOC_NGRAM_TOPK,
               "corpus-wide top-k bigram counts (LM stats sweep)",
               tags=("text",)),

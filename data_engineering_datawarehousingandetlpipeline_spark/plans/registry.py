@@ -30,200 +30,6 @@ class QuerySpec:
     tags: tuple[str, ...] = field(default=())
 
 
-#: The driver's per-round CORRECTNESS snapshot covers only the FIRST 50
-#: registry entries; these names are pulled to the head, in this order,
-#: and everything else follows in module order. Rotation policy (also in
-#: COVERAGE.md): a query whose implementation changed, or that has never
-#: been driver-verified, MUST be in this list; multiply-green unchanged
-#: queries rotate out to make room and rotate back in later rounds. The
-#: window is COMPUTED, not hand-derived: ``python tools/window_planner.py
-#: --changed <CHANGED_QUERIES>`` after each round's CORRECTNESS lands,
-#: and tests/test_window_planning.py re-runs that math against the
-#: committed history (``PLANNED_FOR_HISTORY`` below) so this tuple can
-#: never drift from the policy.
-#:
-#: Round-16 window: third steady-state rotation, re-planned LIVE as the
-#: round's code changes and debut landed (``python
-#: tools/window_planner.py --changed streaming_dup_matrix
-#: streaming_emb_dedup warehouse_compaction``; the debut is
-#: never-driver-verified, so the planner seats it first automatically).
-#: Planner order: the 2 r16 debuts (emb_ivf_append — incremental ANN
-#: index maintenance, the r15 stretch; warehouse_bucketed_join — the
-#: one r15 component without a driver row), the 3 CHANGED queries (the
-#: accumulators' pfx state layout + in-query compaction; the
-#: compaction-query assert split), the 12-name exhausted set (green
-#: r12, at the 4-round staleness limit this round, non-negotiable),
-#: then the 33 oldest green-r13 rotations (oldest-last-green order,
-#: name tiebreak). Displaced to the deferral tail by the 2 debut + 3
-#: changed slots: referral_pagerank, referral_rollup,
-#: schema_projection, shipping_priority, sliding_window_stats — green
-#: r13, part of the r17 exhausted set beside small_qty_revenue,
-#: top_supplier, validate_counts, volume_shipping, waiting_suppliers,
-#: watermark_filter.
-WINDOW_HEAD: tuple[str, ...] = (
-    # r16 debuts (planner seats never-driver-verified first)
-    "emb_ivf_append",
-    "warehouse_bucketed_join",
-    # CHANGED (3, planner order): first driver rows on the r16 code
-    "streaming_dup_matrix",
-    "streaming_emb_dedup",
-    "warehouse_compaction",
-    # the 12-name exhausted set (green r12 — staleness limit reached)
-    "salted_rollup",
-    "scd2_event_enrich",
-    "silence_report",
-    "source_overlap",
-    "split_leakage_audit",
-    "supplier_volume",
-    "top_customers",
-    "top_orders_per_customer",
-    "user_day_overlap",
-    "user_rolling_stats",
-    "value_correlations",
-    "value_quantiles",
-    # the 33 oldest green-r13 rotations (oldest-last-green, name tiebreak)
-    "asof_last_error",
-    "customer_order_distribution",
-    "customer_snapshot_diff",
-    "day_window",
-    "discounted_revenue",
-    "disjunctive_band_revenue",
-    "distinct_counts",
-    "doc_ngram_jaccard",
-    "dup_audit",
-    "dup_audit_hourly",
-    "event_rolling_anomaly",
-    "event_value_percentiles",
-    "excess_volume_suppliers",
-    "filtered_count",
-    "hourly_rollup",
-    "idle_rich_customers",
-    "incremental_star_rollup",
-    "json_props",
-    "json_props_variant",
-    "large_volume_orders",
-    "late_shipment_priority",
-    "lineitem_contract",
-    "long_term_users",
-    "max_ts_per_user",
-    "min_cost_supplier",
-    "missingness",
-    "nation_market_share",
-    "nation_product_profit",
-    "native_session_window",
-    "outliers",
-    "part_concentration",
-    "part_supplier_variety",
-    "promo_revenue_share",
-)
-
-#: The CORRECTNESS round the current WINDOW_HEAD was planned against
-#: (``latest`` in tools/window_planner.py terms: the head above is the
-#: planner's output for round PLANNED_FOR_HISTORY + 1). The generalized
-#: planner test recomputes the plan whenever the committed history sits
-#: at exactly this round and asserts WINDOW_HEAD matches; when a newer
-#: CORRECTNESS file lands, the test skips until the builder re-plans.
-PLANNED_FOR_HISTORY: int = 15
-
-#: Queries whose implementation changed since their last green driver
-#: row. The builder maintains this per round (the planner cannot see the
-#: diff); the planner pulls these into the window regardless of green
-#: history, and the generalized planner test feeds this exact set back
-#: into the recomputation. r16: the two cross-batch accumulator queries
-#: changed for real — pfx-partitioned state layout with pruned prior
-#: reads, and an in-query compaction step whose folded sink now feeds
-#: the returned result — and warehouse_compaction's in-query assertion
-#: flow was restructured (ADVICE r16). Adjudicated NOT changed: the 14
-#: e2e-drain queries touched only via scratch.materialized_result's new
-#: non-local-master guard — in local mode (the only mode the driver,
-#: sweeps and bench run) the executed path, plan and results are
-#: byte-identical, so no re-verification is owed.
-CHANGED_QUERIES: tuple[str, ...] = (
-    "streaming_dup_matrix",
-    "streaming_emb_dedup",
-    "warehouse_compaction",
-)
-
-#: Names that MUST sit inside the driver's 50-entry window this round:
-#: every query that has never received a driver row, every query whose
-#: implementation changed since its last green row, and every query at
-#: the exhausted deferral limit. Enforced by tools/driver_sweep.py,
-#: tools/closing_check.py and tests/test_plan_quality.py so a rotation
-#: can never silently strand a debut (r6 verdict, marching order 5).
-#:
-#: r16: the 2 debuts (first driver rows), the 3 changed queries (via
-#: CHANGED_QUERIES below), and the 12-name exhausted set (green r12, at
-#: the 4-round staleness limit — non-negotiable window members).
-MUST_VERIFY: tuple[str, ...] = (
-    "emb_ivf_append",
-    "warehouse_bucketed_join",
-    "salted_rollup",
-    "scd2_event_enrich",
-    "silence_report",
-    "source_overlap",
-    "split_leakage_audit",
-    "supplier_volume",
-    "top_customers",
-    "top_orders_per_customer",
-    "user_day_overlap",
-    "user_rolling_stats",
-    "value_correlations",
-    "value_quantiles",
-) + CHANGED_QUERIES
-
-#: DEBUT QUEUE — queries implemented AFTER this round's window was
-#: committed: debuts park here and take next-round slots first, per
-#: policy rule 1; the planner test recomputes the committed window with
-#: these names excluded, since they did not exist when it was planned.
-#: Machine-readable; CI cross-checks this against the
-#: CORRECTNESS_r0*.json history (every never-driver-verified registry
-#: query must be here or in WINDOW_HEAD — tests/test_window_planning.py),
-#: and tools/window_planner.py consumes it to COMPUTE the next round's
-#: window instead of re-deriving the math by hand.
-#:
-#: r16 round-open: empty — the r15 debuts both seated and went green;
-#: this round's planned debut (warehouse_bucketed_join) will seat via a
-#: live --changed re-plan when it registers, per the r15 process
-#: learning, rather than parking here.
-DEBUT_QUEUE: tuple[str, ...] = ()
-
-#: HISTORICAL — the r10 staged catch-up (r11→r13). The lost round 10
-#: (empty CORRECTNESS file: the registry was import-dead when the driver
-#: ran) left more exhausted deferrals than one 50-slot window holds; the
-#: amendment in tools/window_planner.py staged them: r11 verified the
-#: 2-debut + 1-changed + 47-oldest-stale head and carried 48 green-r8
-#: rotations (absorbed by the r12 window); r12 carried 48 green-r9
-#: rotations (absorbed by the r13 WINDOW_HEAD above). The carry tuples
-#: that staged this (R12_CARRY, R13_CARRY) are retired — git history
-#: (r12 tree) and the planner tests' skip markers hold the record; the
-#: per-round compensating evidence lives in the committed
-#: SWEEP_SF001/SWEEP_SF01 artifacts for r11 and r12.
-
-#: REGISTRY-GROWTH POLICY AT CAPACITY (decided r13 per the r12 verdict,
-#: marching order 5; pinned by tests/test_window_planning.py).
-#:
-#: History: the registry reached 148 queries at r9 — the ceiling of a
-#: 3-round rotation (3 × 50-slot window − 2 slack slots for debuts and
-#: changed queries). The lost round 10 then forced the three-round
-#: staged catch-up above, which is exactly what drifting past capacity
-#: without a policy looks like.
-#:
-#: Decision — option (a), a permanent FOUR-round rotation:
-#:   * ``window_planner.STALENESS_LIMIT`` is 4: every query re-verifies
-#:     against the driver at most 4 rounds apart;
-#:   * the compensating control is the per-round DUAL-TIER full-registry
-#:     sweep (SWEEP_SF001_r{N}.json at sf0.01, the tier the driver's own
-#:     compare runs at, + SWEEP_SF01_r{N}.json at sf0.1, the closing
-#:     tier), committed every round since r11: every registered query
-#:     keeps a builder-side oracle verdict EVERY round even when its
-#:     driver row is up to 4 rounds old;
-#:   * the ceiling is therefore REGISTRY_CEILING = 4 × 50 − 2 = 198;
-#:     registering query #199 is a hard breach (planner test), and if
-#:     the per-round sweeps ever stop landing, no debut is legal until
-#:     the registry is back under the 3-round ceiling of 148.
-REGISTRY_CEILING: int = 198
-
-
 #: The 22 TPC-H plan-shape adaptations (Q1..Q22, in Q order) — bench.py's
 #: second calm-timed tier (r8 verdict, marching order 5). The headline
 #: 22-query bench set predates this family, so the star-join /
@@ -259,13 +65,8 @@ TPCH_SHAPES: tuple[str, ...] = (
 
 
 def all_queries() -> dict[str, QuerySpec]:
-    """Assemble the full query surface from the plan modules.
-
-    Ordering: :data:`WINDOW_HEAD` first (the driver's 50-entry correctness
-    window), then every remaining query in module order. An unknown name
-    in WINDOW_HEAD fails loudly — silently shrinking the verified window
-    would be worse than a crash.
-    """
+    """Assemble the full query surface from the plan modules, in module
+    order. A name registered twice fails loudly."""
     from data_engineering_datawarehousingandetlpipeline_spark.plans import (
         analytics,
         curation,
@@ -280,9 +81,4 @@ def all_queries() -> dict[str, QuerySpec]:
             if spec.name in specs:
                 raise ValueError(f"duplicate query name: {spec.name}")
             specs[spec.name] = spec
-    missing = [name for name in WINDOW_HEAD if name not in specs]
-    if missing:
-        raise ValueError(f"WINDOW_HEAD names not registered: {missing}")
-    ordered = {name: specs[name] for name in WINDOW_HEAD}
-    ordered.update((n, s) for n, s in specs.items() if n not in ordered)
-    return ordered
+    return specs

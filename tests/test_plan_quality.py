@@ -316,25 +316,6 @@ def test_source_stats_is_single_scan_partial_agg(spark):
     assert "partial_count" in plan or "partial_sum" in plan
 
 
-def test_driver_correctness_window_contains_unverified_queries():
-    """The round driver records correctness rows for only the FIRST 50
-    registry entries. Every query that has never received a driver row,
-    or whose implementation changed since its last green row, is listed
-    in the registry's MUST_VERIFY annotation and must sit inside that
-    window. A failure here means a rotation stranded a debut in the
-    silent zone — fix WINDOW_HEAD before shipping. (Generalized from the
-    per-round hardcoded list per the r6 verdict, marching order 5.)"""
-    from data_engineering_datawarehousingandetlpipeline_spark.plans.registry import (
-        MUST_VERIFY,
-    )
-
-    names = list(all_queries())
-    stranded = [(n, names.index(n)) for n in MUST_VERIFY if names.index(n) >= 50]
-    assert not stranded, (
-        f"MUST_VERIFY queries outside the driver's 50-entry window: {stranded}"
-    )
-
-
 def test_span_dedup_is_postings_shaped(spark):
     """Span dedup must stay an equi-join over hashed-gram postings with
     partial aggregation — one corpus scan feeding the postings, no
@@ -557,44 +538,6 @@ def test_percentiles_have_no_per_group_corpus_window(spark):
             assert "__pid" in line, line
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_window_head_is_exactly_fifty():
-    """The driver records the FIRST 50 registry entries; WINDOW_HEAD must
-    be exactly that size — one entry over and the 50th silently falls out
-    of the verified window, one under and a stale tail query drifts in
-    unreviewed."""
-    from data_engineering_datawarehousingandetlpipeline_spark.plans.registry import (
-        WINDOW_HEAD,
-    )
-
-    assert len(WINDOW_HEAD) == 50
-    assert len(set(WINDOW_HEAD)) == 50  # no duplicates hiding a shortfall
-
-
-def test_must_verify_queries_sit_inside_the_window():
-    """Every never-driver-verified or changed-this-round query (the
-    registry's MUST_VERIFY annotation) must occupy one of the first 50
-    registry slots — the only ones the driver snapshots — so a window
-    rotation can never silently strand a debut."""
-    from data_engineering_datawarehousingandetlpipeline_spark.plans.registry import (
-        MUST_VERIFY,
-        WINDOW_HEAD,
-    )
-
-    stranded = [n for n in MUST_VERIFY if n not in WINDOW_HEAD]
-    assert not stranded, f"MUST_VERIFY stranded outside WINDOW_HEAD: {stranded}"
-
-
-def test_window_guard_detects_a_stranded_debut():
-    """Negative case for the sweep/CI guard: if a must-verify name sat in
-    the registry tail, the position check must flag it — the guard can't
-    be a tautology that passes for any annotation."""
-    names = list(all_queries())
-    tail_query = names[60]  # any name past the 50-slot window
-    fake_must_verify = (names[0], tail_query)  # one in-window, one stranded
-    mis = [(n, names.index(n)) for n in fake_must_verify if names.index(n) >= 50]
-    assert mis == [(tail_query, 60)]
 
 
 def test_hard_negative_mining_is_single_scan_single_argmax_shuffle(spark):

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_engineering_datawarehousingandetlpipeline_spark.plans import all_queries
@@ -96,11 +97,13 @@ def test_bm25_rare_term_outranks_common_term(spark):
     assert ranks[0] < min(ranks[1], ranks[2], ranks[3])
 
 
-def test_rrf_score_is_recomputable_from_member_ranks(spark):
+@pytest.mark.parametrize("name", ["retrieval_rrf", "retrieval_rrf_ann"])
+def test_rrf_score_is_recomputable_from_member_ranks(spark, name):
     """Every fused row's rrf_score must equal the arithmetic over its own
     rank columns, each modality pool must respect RRF_POOL, and a row in
-    both pools must score the two-term sum."""
-    rows = all_queries()["retrieval_rrf"].fn(spark, SF_DIR).collect()
+    both pools must score the two-term sum — for the exact and the
+    ANN-served dense pool alike."""
+    rows = all_queries()[name].fn(spark, SF_DIR).collect()
     assert rows, "empty fusion output"
     both = 0
     for r in rows:

@@ -2,26 +2,18 @@
 DuckDB oracle side-by-side (the round driver's t2 comparison), under a
 hostile-timezone vanilla session. Exit output ends with `TOTAL <n> BAD <m>`.
 
-Usage: python tools/driver_sweep.py [--json=PATH] [name ...]
+Usage: python tools/driver_sweep.py [name ...]
 (SPARK_GRAFT_SF_DIR overrides the default sf0.01 tables; ~10 min on
 local[8] for the full registry; positional names restrict the sweep to
-those queries; --json writes a per-query CORRECTNESS-shaped record —
-the machine-readable artifact the sf0.1 closing sweep commits as
-SWEEP_SF01_r{N}.json, r9 verdict marching order 5).
+those queries).
 """
-import json as _json
 import os
 import sys, duckdb, decimal, math
-json_out = None
-for a in list(sys.argv[1:]):
-    if a.startswith("--json="):
-        json_out = a.split("=", 1)[1]
-        sys.argv.remove(a)
 sys.path.insert(0, str(__import__("pathlib").Path(__file__).resolve().parent.parent))
 from pyspark.sql import SparkSession
 # SPARK_GRAFT_SHUFFLE_PARTITIONS overrides the default 8 for the
-# shuffle-layout-invariance check (r11: the window re-swept at 3
-# partitions to force different merge orders / AQE build sides)
+# shuffle-layout-invariance check (e.g. 3 partitions forces different
+# merge orders / AQE build sides)
 _shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8")
 spark = (SparkSession.builder.master("local[8]")
          .config("spark.sql.session.timeZone", "America/New_York")
@@ -40,17 +32,6 @@ if len(sys.argv) > 1:
     unknown = [n for n in sys.argv[1:] if n not in qs]
     assert not unknown, f"unknown query names: {unknown}"
     qs = {n: qs[n] for n in sys.argv[1:]}
-# window check: every never-driver-verified or changed-this-round query
-# (registry MUST_VERIFY annotation) must sit inside the driver's window,
-# so a rotation can never silently strand a debut. WINDOW comes from
-# window_planner (the single source of the window size — r12 advice #4).
-from data_engineering_datawarehousingandetlpipeline_spark.plans.registry import all_queries, MUST_VERIFY
-sys.path.insert(0, str(__import__("pathlib").Path(__file__).resolve().parent))
-from window_planner import WINDOW
-order = list(all_queries())
-mis = [(n, order.index(n)) for n in MUST_VERIFY if order.index(n) >= WINDOW]
-assert not mis, f"MUST_VERIFY queries stranded outside the {WINDOW}-slot window: {mis}"
-print(f"window positions OK ({len(MUST_VERIFY)} must-verify inside); total queries:", len(order))
 def norm(v):
     if isinstance(v, decimal.Decimal): v = float(v)
     if isinstance(v, float):
@@ -59,7 +40,6 @@ def norm(v):
     if hasattr(v, "isoformat"): return v.isoformat()
     return v
 bad = []
-results = {}
 for name in qs:
     try:
         sdf = qs[name](spark, sf)
@@ -67,11 +47,6 @@ for name in qs:
         srows = [tuple(norm(x) for x in r) for r in sdf.collect()]
         if name not in osql:
             print(f"{name}: rows={len(srows)} (no oracle)")
-            results[name] = {
-                "rows_match": None, "schema_match": None,
-                "hash_match": None, "spark_rows": len(srows),
-                "oracle_rows": None, "err": None,
-            }
             continue
         res = con.execute(osql[name])
         ocols = [d[0].lower() for d in res.description]
@@ -81,12 +56,6 @@ for name in qs:
         k = lambda t: tuple((x is None, str(x)) for x in t)
         sr = sorted((tuple(r[i] for i in sidx) for r in srows), key=k)
         orr = sorted((tuple(r[i] for i in oidx) for r in orows), key=k)
-        results[name] = {
-            "rows_match": len(sr) == len(orr),
-            "schema_match": sorted(scols) == sorted(ocols),
-            "hash_match": sr == orr,
-            "spark_rows": len(sr), "oracle_rows": len(orr), "err": None,
-        }
         ok = sorted(scols) == sorted(ocols) and sr == orr
         if not ok:
             bad.append(name)
@@ -96,16 +65,7 @@ for name in qs:
                     print("  spark :", a); print("  oracle:", b); break
     except Exception as ex:
         bad.append(name)
-        results[name] = {
-            "rows_match": False, "schema_match": False, "hash_match": False,
-            "spark_rows": None, "oracle_rows": None,
-            "err": f"{type(ex).__name__}: {str(ex)[:200]}",
-        }
         print(f"ERR {name}: {type(ex).__name__}: {str(ex)[:200]}")
-if json_out:
-    with open(json_out, "w") as fh:
-        _json.dump(results, fh, indent=2, sort_keys=True)
-    print("wrote", json_out)
 print("TOTAL", len(qs), "BAD", len(bad), bad)
 spark.stop()
 sys.exit(1 if bad else 0)

@@ -4,10 +4,9 @@ Usage: python tools/isolate_r17.py <query> [<query> ...]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      ISOLATE_WARMUPS (default 1), ISOLATE_RUNS (default 3).
 
-Same protocol as tools/registry_timings.py (warm-up discarded, best of
-the timed runs, noop sink so the computation is timed rather than the
-sink — guide §1.4) but scoped to an explicit query list so a single
-before/after measurement doesn't pay a full registry sweep.
+Warm-up discarded, best of the timed runs, noop sink so the computation
+is timed rather than the sink — scoped to an explicit query list so a
+single before/after measurement doesn't pay a full registry sweep.
 """
 
 from __future__ import annotations
