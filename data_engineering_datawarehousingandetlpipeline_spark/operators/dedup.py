@@ -27,8 +27,6 @@ Embedding-cosine near-dup lives in operators/similarity.py.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -54,12 +52,9 @@ MERSENNE_P = (1 << 31) - 1
 #: from the convergence probe) is at most this many rows runs as
 #: broadcast hash joins — zero corpus-keyed exchanges (guide §3.1). Rows
 #: are two ids (~40 B framed), so the default tracks the stock 10 MB
-#: autoBroadcastJoinThreshold; raise it via env on executors with room
-#: for bigger broadcasts, or lower it for very wide id types. The
-#: shuffle path remains the fallback for early warehouse-scale rounds.
-FRONTIER_BROADCAST_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_FRONTIER_BROADCAST_MAX", "250000")
-)
+#: autoBroadcastJoinThreshold. The shuffle path remains the fallback for
+#: early warehouse-scale rounds.
+FRONTIER_BROADCAST_MAX_ROWS = 250_000
 
 
 def perm_coefficients(perms: int = MINHASH_PERMS) -> list[tuple[int, int]]:
@@ -820,9 +815,8 @@ def near_dup_clusters(
       — ZERO corpus-keyed exchanges per round (was ~7 Exchange nodes:
       edges⋈frontier, groupBy(dst), labels⋈nmin, cand⋈lut). The frontier
       shrinks geometrically on near-dup graphs, so at any scale only the
-      first round(s) pay shuffle rounds; the threshold is env-tunable
-      (``SPARK_GRAFT_FRONTIER_BROADCAST_MAX``) for cluster-sized
-      broadcasts and the shuffle path remains the verbatim fallback;
+      first round(s) pay shuffle rounds, and the shuffle path remains
+      the verbatim fallback;
     - each round ends with a pointer jump: the shuffle path jumps
       ``label ← label[label]`` against the PREVIOUS round's checkpointed
       label map (deliberately NOT the round's own candidate map, whose

@@ -23,7 +23,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from data_engineering_datawarehousingandetlpipeline_spark.operators.cleaning import (
     prepare_hourly,
@@ -39,6 +39,20 @@ from data_engineering_datawarehousingandetlpipeline_spark.warehouse.store import
 
 #: reference micro-batch cadence: flush every 10 s (kafka_stream.py:336).
 DEFAULT_TRIGGER_SECONDS = 10
+
+
+def _start(
+    writer: DataStreamWriter, available_now: bool, trigger_seconds: int | None
+) -> StreamingQuery:
+    """Start a configured stream writer under the trigger every ``start_*``
+    entry point shares: ``available_now`` drains what the source holds and
+    stops; otherwise a micro-batch every ``trigger_seconds`` (falsy: Spark's
+    default, as fast as possible)."""
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif trigger_seconds:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    return writer.start()
 
 
 def clean_batch(batch: DataFrame) -> DataFrame:
@@ -94,11 +108,7 @@ def start_ingestion(
     writer = source.writeStream.foreachBatch(make_batch_sink(warehouse)).option(
         "checkpointLocation", checkpoint_dir
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start(writer, available_now, trigger_seconds)
 
 
 def _committed_batch_ids(checkpoint_dir: str) -> set[int]:
@@ -199,11 +209,7 @@ def start_chunking(
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start(writer, available_now, trigger_seconds)
 
 
 def start_exact_dedup(
@@ -245,11 +251,7 @@ def start_exact_dedup(
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start(writer, available_now, trigger_seconds)
 
 
 def start_minhash_dedup(
@@ -307,11 +309,7 @@ def start_minhash_dedup(
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start(writer, available_now, trigger_seconds)
 
 
 def start_windowed_minhash_dedup(
@@ -369,11 +367,7 @@ def start_windowed_minhash_dedup(
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start(writer, available_now, trigger_seconds)
 
 
 def start_windowed_exact_dedup(
@@ -416,11 +410,7 @@ def start_windowed_exact_dedup(
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start(writer, available_now, trigger_seconds)
 
 
 #: Default fan-out of the ``pfx`` sub-partition every accumulator state
@@ -869,11 +859,7 @@ def start_source_pair_matrix(
     writer = source.writeStream.foreachBatch(_batch).option(
         "checkpointLocation", checkpoint_dir
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start(writer, available_now, trigger_seconds)
 
 
 def start_embedding_near_dup(
@@ -1074,11 +1060,7 @@ def start_embedding_near_dup(
     writer = source.writeStream.foreachBatch(_batch).option(
         "checkpointLocation", checkpoint_dir
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start(writer, available_now, trigger_seconds)
 
 
 def start_scd2(
@@ -1107,11 +1089,7 @@ def start_scd2(
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start(writer, available_now, trigger_seconds)
 
 
 def start_contract_monitor(
@@ -1180,11 +1158,7 @@ def start_contract_monitor(
     writer = source.writeStream.foreachBatch(sink).option(
         "checkpointLocation", checkpoint_dir
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start(writer, available_now, trigger_seconds)
 
 
 def start_native_sessions(
@@ -1231,8 +1205,4 @@ def start_native_sessions(
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start(writer, available_now, trigger_seconds)

@@ -51,19 +51,6 @@ def _rel_path(table: WarehouseTable, uri: str) -> str:
     return os.path.relpath(os.path.abspath(path), root)
 
 
-def data_files(table: WarehouseTable) -> list[str]:
-    """Root-relative paths of every parquet data file (sidecars excluded)."""
-    out: list[str] = []
-    for dirpath, dirnames, filenames in os.walk(table.root):
-        dirnames[:] = [d for d in dirnames if not d.startswith(("_", "."))]
-        for name in filenames:
-            if name.endswith(".parquet") and not name.startswith((".", "_")):
-                out.append(
-                    _rel_path(table, os.path.join(dirpath, name))
-                )
-    return sorted(out)
-
-
 def analyze_file_stats(
     table: WarehouseTable, cols: Sequence[str], incremental: bool = False
 ) -> int:
@@ -94,7 +81,7 @@ def analyze_file_stats(
             )
         existing = existing_df.collect()
         known = {r["file"] for r in existing}
-        fresh = [p for p in data_files(table) if p not in known]
+        fresh = [p for p in table.data_files() if p not in known]
         if not fresh:
             table._log_maintenance(
                 [("analyze_stats_incr", ",".join(cols), None, 0, None, None)]
@@ -163,7 +150,7 @@ def select_files(
     column leaves min/max NULL — unknowable, so read it). Files missing
     from the manifest are always read.
     """
-    listing = data_files(table)
+    listing = table.data_files()
     stats_path = _stats_dir(table)
     if not os.path.isdir(stats_path):
         return listing, []

@@ -58,11 +58,15 @@ UTC date of the event timestamp.
 
 from __future__ import annotations
 
+import datetime
 import json
+import math
 import os
+import shutil
 import socket
 import time
 from collections.abc import Sequence
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -73,14 +77,12 @@ from data_engineering_datawarehousingandetlpipeline_spark.schema import KEY_COLU
 
 
 def is_visible_data_file(name: str) -> bool:
-    """True iff ``name`` is a COMMITTED data file by the Hadoop committer
-    convention: in-flight / metadata output hides under ``_`` or ``.``
-    prefixes (``_temporary``, ``_SUCCESS``, ``.crc``). The ONE predicate
-    every file-visibility probe in the engine shares (ADVICE r15:
-    ``partition_file_counts`` matched on a ``.parquet`` suffix while the
-    streaming state probe matched the prefix convention — a committer
-    emitting differently-named data files would have been visible to one
-    and invisible to the other)."""
+    """True iff ``name`` is a committed data file: it has no ``_`` or ``.``
+    prefix. In-flight and metadata output hides under those prefixes
+    (``_temporary``, ``_SUCCESS``, ``.crc``), the rule Spark's own file
+    index applies. :meth:`WarehouseTable.data_files` (and every count
+    built on it) and the streaming state probe
+    (``streaming.pipeline._state_batch_ids``) both use it."""
     return not name.startswith(("_", "."))
 
 
@@ -365,6 +367,21 @@ class WarehouseTable:
     def _with_dt(self, df: DataFrame) -> DataFrame:
         return df.withColumn("dt", F.to_date(F.col(self.ts_col)))
 
+    def _overwrite_partitions(self, df: DataFrame) -> None:
+        """Replace exactly the ``dt`` partitions present in ``df`` (dynamic
+        partition overwrite). The mode is a per-write option, so no
+        rewrite reads or sets session state."""
+        (
+            df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("dt")
+            .parquet(self.root)
+        )
+        # the overwrite deleted files the session's shared file-status
+        # cache may still list (metadataCacheTTLSeconds is ∞ by default);
+        # stale listings would make the next read fail on missing files
+        self.spark.catalog.refreshByPath(self.root)
+
     def append(
         self, df: DataFrame, verify: bool = True, evolve_schema: bool = False
     ) -> int:
@@ -497,22 +514,7 @@ class WarehouseTable:
         )
         if touched is not None:
             self._retain_days(touched)  # keep the replaced files readable
-        mode_key = "spark.sql.sources.partitionOverwriteMode"
-        previous = self.spark.conf.get(mode_key, "static")
-        self.spark.conf.set(mode_key, "dynamic")
-        try:
-            (
-                self._with_dt(merged)
-                .write.mode("overwrite")
-                .partitionBy("dt")
-                .parquet(self.root)
-            )
-        finally:
-            self.spark.conf.set(mode_key, previous)
-        # the overwrite deleted files the session's shared file-status
-        # cache may still list (metadataCacheTTLSeconds is ∞ by default);
-        # stale listings would make the next read fail on missing files
-        self.spark.catalog.refreshByPath(self.root)
+        self._overwrite_partitions(self._with_dt(merged))
         if touched is not None:
             self._snapshot_version("merge_replace", touched)
         return n
@@ -555,23 +557,10 @@ class WarehouseTable:
         survivors = slice_df.filter(~predicate)
         n_deleted = slice_df.count() - survivors.count()
         self._retain_days(days)  # keep the pre-delete files readable
-        mode_key = "spark.sql.sources.partitionOverwriteMode"
-        previous = self.spark.conf.get(mode_key, "static")
-        self.spark.conf.set(mode_key, "dynamic")
-        try:
-            (
-                survivors.write.mode("overwrite")
-                .partitionBy("dt")
-                .parquet(self.root)
-            )
-        finally:
-            self.spark.conf.set(mode_key, previous)
-        self.spark.catalog.refreshByPath(self.root)
+        self._overwrite_partitions(survivors)
         # dynamic overwrite only rewrites partitions present in the
         # survivors frame — a day whose EVERY row matched produces no
         # survivor rows and must be dropped explicitly
-        import shutil
-
         surviving_days = {
             r["dt"] for r in survivors.select("dt").distinct().collect()
         }
@@ -605,69 +594,25 @@ class WarehouseTable:
         retention a date-partitioned layout exists to make possible).
         Returns the number of partitions dropped.
         """
-        import datetime
-        import shutil
-
-        if not self.exists():
-            return 0
         cutoff = anchor - datetime.timedelta(days=keep_days)
-        dropped = 0
-        dropped_days: list[datetime.date] = []
-        for name in sorted(os.listdir(self.root)):
-            if not name.startswith("dt="):
-                continue
-            try:
-                day = datetime.date.fromisoformat(name[3:])
-            except ValueError:
-                continue
-            if day < cutoff:
-                shutil.rmtree(os.path.join(self.root, name))
-                dropped += 1
-                dropped_days.append(day)
-        if dropped:
+        expired = [(day, path) for day, path in self._partitions() if day < cutoff]
+        for _, path in expired:
+            shutil.rmtree(path)
+        if expired:
             self.spark.catalog.refreshByPath(self.root)
             # retention deliberately does NOT retain (it exists to free
             # space); older versions referencing these files become
             # unreadable — time travel after VACUUM, same as Delta
-            self._snapshot_version("expire_partitions", dropped_days)
-        return dropped
+            self._snapshot_version("expire_partitions", [d for d, _ in expired])
+        return len(expired)
 
     def compact(self) -> int:
-        """Rewrite every date partition into one file (small-files repair).
-
-        Streaming ingestion leaves one file per micro-batch per partition;
-        at scale, scan cost becomes file-count-bound long before it is
-        byte-bound. This is the plain-parquet emulation of
-        OPTIMIZE / rewriteDataFiles: materialize the table, then
-        dynamic-partition-overwrite with one shuffle partition per date.
-        (A table format — Delta/Iceberg — makes the same rewrite
-        transactional; the call site would not change.)
-
-        Returns the number of data files after compaction.
+        """Rewrite every date partition into one key-sorted file
+        (small-files repair): :meth:`compact_partitions` with an unbounded
+        file size and no audit row. A partition already holding one file
+        is left as it is. Returns the number of data files afterwards.
         """
-        if not self.exists():
-            return 0
-        self._retain_days(None)  # whole-table rewrite: retain everything
-        snapshot = self.read().localCheckpoint(eager=True)
-        n_dates = snapshot.select(F.to_date(F.col(self.ts_col))).distinct().count()
-        mode_key = "spark.sql.sources.partitionOverwriteMode"
-        previous = self.spark.conf.get(mode_key, "static")
-        self.spark.conf.set(mode_key, "dynamic")
-        try:
-            (
-                self._with_dt(snapshot)
-                .repartition(max(n_dates, 1), "dt")
-                # cluster by the key columns inside each rewritten file:
-                # parquet row-group min/max stats then make per-key scans
-                # skip groups (the plain-parquet analogue of Z-ordering)
-                .sortWithinPartitions("dt", *self.keys)
-                .write.mode("overwrite")
-                .partitionBy("dt")
-                .parquet(self.root)
-            )
-        finally:
-            self.spark.conf.set(mode_key, previous)
-        self._snapshot_version("compact", None)
+        self.compact_partitions(math.inf, log=False)
         return self.data_file_count()
 
     def compact_partitions(
@@ -679,15 +624,13 @@ class WarehouseTable:
     ) -> int:
         """Partition-granular OPTIMIZE: bin-pack small files, day by day.
 
-        The warehouse-scale form of :meth:`compact` (which rewrites the
-        WHOLE table — fine for repair, wrong as routine maintenance on a
-        100 TB table): each date partition is considered independently and
-        rewritten only if it holds more files than its rows justify —
-        more than ``ceil(rows / target_file_rows)``, the bin-packed file
-        count. Cost therefore scales with the partitions that actually
-        need compaction (the recent ones streaming ingestion fragmented),
-        never with table history, and re-running is a no-op (each
-        rewritten partition lands exactly at its bin-packed file count).
+        Each date partition is considered independently and rewritten
+        only if it holds more files than its rows justify — more than
+        ``ceil(rows / target_file_rows)``, the bin-packed file count. Cost
+        therefore scales with the partitions that actually need
+        compaction (the recent ones streaming ingestion fragmented), never
+        with table history, and re-running is a no-op (each rewritten
+        partition lands exactly at its bin-packed file count).
 
         ``before`` is the optional (UTC date) eligibility anchor — only
         partitions strictly OLDER are touched, so hot partitions still
@@ -720,31 +663,17 @@ class WarehouseTable:
         makes each rewrite transactional; the call site would not
         change.)
         """
-        import datetime
-        import math
-        from concurrent.futures import ThreadPoolExecutor
-
         if not self.exists():
             return 0
         anchor = before.isoformat() if before is not None else None
-        candidates: list[tuple[datetime.date, str, int]] = []
-        for name in sorted(os.listdir(self.root)):
-            if not name.startswith("dt="):
-                continue
-            try:
-                day = datetime.date.fromisoformat(name[3:])
-            except ValueError:
-                continue
-            if before is not None and day >= before:
-                continue
-            path = os.path.join(self.root, name)
-            n_files = sum(
-                1
-                for f in os.listdir(path)
-                if f.endswith(".parquet") and not f.startswith(".")
-            )
-            if n_files > 1:
-                candidates.append((day, path, n_files))
+        counts = self.partition_file_counts()
+        candidates = [
+            (day, path, n_files)
+            for day, path in self._partitions()
+            if (n_files := counts[day.isoformat()]) > 1
+            and (before is None or day < before)
+        ]
+        stored = self.table_schema()
 
         def rewrite(item) -> tuple | None:
             """Rewrite one partition; returns its audit entry or None.
@@ -760,7 +689,14 @@ class WarehouseTable:
             self.spark.sparkContext.setJobDescription(
                 f"compact_partitions: dt={day.isoformat()}"
             )
-            part = self.spark.read.parquet(path)
+            # bind to the registered schema: a partition holding files
+            # from before and after a widening must keep the added column
+            reader = self.spark.read
+            if stored is not None:
+                reader = reader.schema(
+                    T.StructType([f for f in stored.fields if f.name != "dt"])
+                )
+            part = reader.parquet(path)
             rows = part.count()  # parquet footer metadata, no data read
             goal = max(1, math.ceil(rows / target_file_rows))
             if n_files <= goal:
@@ -819,34 +755,55 @@ class WarehouseTable:
             self._log_maintenance(entries)
         return rewritten
 
-    def data_file_count(self) -> int:
-        """Number of parquet data files across all partitions (metadata
-        sidecars like the ``_maintenance`` log are not data)."""
-        total = 0
-        for dirpath, dirnames, filenames in os.walk(self.root):
-            dirnames[:] = [d for d in dirnames if not d.startswith(("_", "."))]
-            total += sum(
-                1
-                for name in filenames
-                if name.endswith(".parquet") and not name.startswith(".")
-            )
-        return total
-
-    def partition_file_counts(self) -> dict[str, int]:
-        """Visible data files per ``dt=`` partition — the maintenance
-        accounting view ``compact_partitions`` plans from (keyed by the
-        ISO date string). Driver-side listing bounded by partitions ×
-        files, the same budget the compaction loop itself pays."""
-        counts: dict[str, int] = {}
-        if not self.exists():
-            return counts
-        for name in sorted(os.listdir(self.root)):
+    def _partitions(self) -> list[tuple[datetime.date, str]]:
+        """``(day, path)`` of every ``dt=YYYY-MM-DD`` partition directory,
+        date-sorted; names that do not parse as a date are skipped."""
+        try:
+            names = os.listdir(self.root)
+        except FileNotFoundError:
+            return []
+        parts = []
+        for name in names:
             if not name.startswith("dt="):
                 continue
-            path = os.path.join(self.root, name)
-            counts[name[3:]] = sum(
-                1 for f in os.listdir(path) if is_visible_data_file(f)
-            )
+            try:
+                day = datetime.date.fromisoformat(name[3:])
+            except ValueError:
+                continue
+            parts.append((day, os.path.join(self.root, name)))
+        return sorted(parts)
+
+    def data_files(self, days=None) -> list[str]:
+        """Sorted root-relative paths (``dt=.../part-...``) of the data
+        files, whole table or the given days' partitions: the one listing
+        every file count, version manifest and skipping probe reads.
+        Sidecars (``_schema``, ``_versions``, ``_maintenance``, ``_stats``)
+        are not partitions, so they never appear."""
+        if days is None:
+            dirs = [path for _, path in self._partitions()]
+        else:
+            dirs = [os.path.join(self.root, f"dt={d.isoformat()}") for d in days]
+        rels: list[str] = []
+        for path in dirs:
+            try:
+                names = os.listdir(path)
+            except FileNotFoundError:
+                continue
+            part = os.path.basename(path)
+            rels.extend(f"{part}/{f}" for f in names if is_visible_data_file(f))
+        return sorted(rels)
+
+    def data_file_count(self) -> int:
+        """Number of data files across all partitions."""
+        return len(self.data_files())
+
+    def partition_file_counts(self) -> dict[str, int]:
+        """Data files per ``dt=`` partition, keyed by the ISO date string —
+        the maintenance accounting view ``compact_partitions`` plans from.
+        An emptied partition directory counts 0."""
+        counts = {day.isoformat(): 0 for day, _ in self._partitions()}
+        for rel in self.data_files():
+            counts[rel[3 : rel.index("/")]] += 1
         return counts
 
     # ------------------------------------------------------------ time travel
@@ -882,29 +839,6 @@ class WarehouseTable:
                 f"{self._latest_version()}); was it vacuumed?"
             ) from None
 
-    def _live_files(self, days=None) -> list[str]:
-        """Relative paths of the data files, whole table or per-day."""
-        if days is not None:
-            dirs = [f"dt={d.isoformat()}" for d in days]
-        else:
-            try:
-                dirs = sorted(
-                    n for n in os.listdir(self.root) if n.startswith("dt=")
-                )
-            except FileNotFoundError:
-                return []
-        rels: list[str] = []
-        for d in dirs:
-            path = os.path.join(self.root, d)
-            if not os.path.isdir(path):
-                continue
-            rels.extend(
-                f"{d}/{f}"
-                for f in os.listdir(path)
-                if f.endswith(".parquet") and not f.startswith(".")
-            )
-        return sorted(rels)
-
     def _snapshot_version(self, op: str, touched_days=None) -> None:
         """Commit a new version manifest (the transaction-log analogue).
 
@@ -918,7 +852,7 @@ class WarehouseTable:
             return
         prev = self._latest_version()
         if prev is None or touched_days is None:
-            files = self._live_files()
+            files = self.data_files()
         else:
             prefixes = tuple(
                 f"dt={d.isoformat()}/" for d in touched_days
@@ -928,7 +862,7 @@ class WarehouseTable:
                 for f in self._manifest(prev)["files"]
                 if not f.startswith(prefixes)
             ]
-            files = sorted(kept + self._live_files(touched_days))
+            files = sorted(kept + self.data_files(touched_days))
         stored = self.table_schema()
         manifest = {
             "version": (prev or 0) + 1,
@@ -1076,9 +1010,7 @@ class WarehouseTable:
         """
         if not self.track_versions:
             return
-        import shutil
-
-        for rel in self._live_files(days):
+        for rel in self.data_files(days):
             src = os.path.join(self.root, rel)
             dst = os.path.join(self._retained_dir(), rel)
             if os.path.exists(dst):
@@ -1208,12 +1140,10 @@ class WarehouseTable:
             raise ValueError(
                 "restore requires track_versions=True at table creation"
             )
-        import shutil
-
         m = self._manifest(version)
         self._retain_days(None)  # later versions must survive the reshape
         target = set(m["files"])
-        current = set(self._live_files())
+        current = set(self.data_files())
         missing = [
             rel
             for rel in target - current
@@ -1235,14 +1165,8 @@ class WarehouseTable:
             except OSError:  # cross-device: degrade to a copy
                 shutil.copy2(src, dst)
         # drop partition dirs the restore emptied entirely
-        for name in os.listdir(self.root):
-            if not name.startswith("dt="):
-                continue
-            path = os.path.join(self.root, name)
-            if os.path.isdir(path) and not any(
-                f.endswith(".parquet") and not f.startswith(".")
-                for f in os.listdir(path)
-            ):
+        for day, path in self._partitions():
+            if not self.data_files([day]):
                 shutil.rmtree(path)
         if m["schema"] is not None:
             self._register_schema(T.StructType.fromJson(m["schema"]))
@@ -1375,8 +1299,6 @@ class WarehouseTable:
         Falls back to real copies when the destination is on a different
         filesystem (hardlinks cannot cross devices).
         """
-        import shutil
-
         if os.path.exists(dest_root) and os.listdir(dest_root):
             raise ValueError(f"clone destination not empty: {dest_root}")
         n_linked = 0

@@ -469,7 +469,7 @@ def test_file_skipping_prunes_files_and_stays_exact(spark, tmp_path):
             "k long, ts string, x double",
         ).withColumn("ts", F.to_timestamp("ts"))
         wh.append(df, verify=False)
-    n_files = len(S.data_files(wh))
+    n_files = len(wh.data_files())
     assert n_files >= 4
 
     profiled = S.analyze_file_stats(wh, ["x"])
@@ -528,20 +528,20 @@ def test_incremental_analyze_profiles_only_new_files(spark, tmp_path):
 
     wh.append(band(0), verify=False)
     wh.append(band(1), verify=False)
-    first = len(S.data_files(wh))
+    first = len(wh.data_files())
     assert S.analyze_file_stats(wh, ["x"]) == first
 
     # two new bands land; incremental profiles exactly those files
     wh.append(band(2), verify=False)
     wh.append(band(3), verify=False)
-    n_new = len(S.data_files(wh)) - first
+    n_new = len(wh.data_files()) - first
     assert n_new > 0
     assert S.analyze_file_stats(wh, ["x"], incremental=True) == n_new
 
     # the merged manifest prunes the new bands too
     read, skipped = S.select_files(wh, "x", 300.0, 302.0)
-    assert read and skipped and len(read) + len(skipped) == len(S.data_files(wh))
-    assert len(read) < len(S.data_files(wh)) / 2
+    assert read and skipped and len(read) + len(skipped) == len(wh.data_files())
+    assert len(read) < len(wh.data_files()) / 2
     got = sorted(r.k for r in S.read_skipping(wh, "x", 300.0, 302.0).collect())
     assert got == [30, 31, 32]
 

@@ -1176,6 +1176,41 @@ def test_delete_where_rewrites_only_matching_partitions(spark, tmp_path):
     assert sorted(r.n_rows for r in log) == [0, 2]
 
 
+def test_file_listing_agrees_with_the_reader_after_rewrites(spark, tmp_path):
+    """The table's one file listing is the set of files Spark reads:
+    after appends (one widening the schema), a delete that empties a day
+    and a compaction, ``data_files()`` equals the reader's input files,
+    the per-partition counts add up to ``data_file_count()``, and the
+    compaction kept every row and the widened column."""
+    wh = WarehouseTable(spark, str(tmp_path / "wh"), keys=["k", "ts"], ts_col="ts")
+    ddl = "k long, ts timestamp, v double"
+    for k in range(4):  # one file per append: days 1 and 2 get two each
+        wh.append(
+            _ts_df(spark, [(k, f"2024-03-0{1 + k % 2}T0{k}:00:00", float(k))], ddl),
+            verify=False,
+        )
+    wh.append(
+        _ts_df(spark, [(4, "2024-03-01T05:00:00", 4.0, "eu")], ddl + ", region string"),
+        verify=False, evolve_schema=True,
+    )
+    wh.append(_ts_df(spark, [(5, "2024-03-03T00:00:00", 5.0)], ddl), verify=False)
+    assert wh.delete_where(F.col("k") == 5) == 1        # empties 2024-03-03
+    assert wh.partition_file_counts() == {"2024-03-01": 3, "2024-03-02": 2}
+    assert wh.compact() == 2
+
+    root = os.path.abspath(wh.root)
+    read = sorted(
+        os.path.relpath(uri.removeprefix("file:"), root)
+        for uri in wh.read().inputFiles()
+    )
+    assert sorted(wh.data_files()) == read
+    assert wh.data_file_count() == sum(wh.partition_file_counts().values())
+    assert wh.partition_file_counts() == {"2024-03-01": 1, "2024-03-02": 1}
+    assert sorted((r.k, r.region) for r in wh.read().collect()) == [
+        (0, None), (1, None), (2, None), (3, None), (4, "eu"),
+    ]
+
+
 def test_time_travel_reads_every_version_back(spark, tmp_path):
     """Opt-in time travel: append → merge_replace → delete_where each
     commit a version; read_as_of(v) returns the table exactly as it was,
@@ -1361,8 +1396,8 @@ def test_restore_rolls_back_zero_copy_and_preserves_later_versions(spark, tmp_pa
 
 def test_version_machinery_model_checked_op_sequence(spark, tmp_path):
     """Model check: a seeded pseudo-random sequence of mutating ops
-    (append / merge_replace / delete_where / compact_partitions /
-    restore) against a pure-Python model of the table. After every op,
+    (append / merge_replace / delete_where / compact / compact_partitions
+    / restore) against a pure-Python model of the table. After every op,
     the live read matches the model; at the end, EVERY still-vacuumed-in
     version's read_as_of matches the model's snapshot for that version.
     One deterministic sequence (seeded) so CI cost is bounded and
@@ -1413,11 +1448,18 @@ def test_version_machinery_model_checked_op_sequence(spark, tmp_path):
                 del model[key]
             commit_snapshot()
         elif op == "compact":
-            n = wh.compact_partitions(
-                target_file_rows=10_000, before=datetime.date(2024, 3, 10)
-            )
-            if n:   # only commits a version if something rewrote
+            if step % 2:
+                # commits a version only if some day held several files;
+                # otherwise the latest version's snapshot is re-recorded
+                # unchanged (the model did not move)
+                wh.compact()
                 commit_snapshot()
+            else:
+                n = wh.compact_partitions(
+                    target_file_rows=10_000, before=datetime.date(2024, 3, 10)
+                )
+                if n:   # only commits a version if something rewrote
+                    commit_snapshot()
         else:  # restore to a random committed version
             target = rng.choice(sorted(snapshots))
             wh.restore(target)
