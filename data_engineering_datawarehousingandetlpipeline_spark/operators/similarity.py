@@ -1003,6 +1003,28 @@ def planes_for_corpus(n_rows: int, target_bucket_size: int = 64) -> int:
     return max(4, math.ceil(math.log2(max(2, n_rows / target_bucket_size))))
 
 
+def lsh_table_tags(vec: Column, n_planes: int, n_tables: int, dim: int) -> Column:
+    """The OR-amplified LSH tags of ``vec``: an explode of one
+    ``struct(tbl, bucket)`` per table, to be selected as ``tb`` beside the
+    id and unpacked to ``tb.tbl``/``tb.bucket``. Table ``t`` owns the md5
+    planes ``t * n_planes + b``, so every table's plane set is disjoint
+    and any two callers with the same geometry bucket bit-identically."""
+    table_planes = [
+        [hyperplane(t * n_planes + b, dim) for b in range(n_planes)]
+        for t in range(n_tables)
+    ]
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(t).alias("tbl"), lsh_bucket(vec, planes).alias("bucket")
+                )
+                for t, planes in enumerate(table_planes)
+            ]
+        )
+    )
+
+
 def _near_dup_tagged(
     df: DataFrame,
     n_planes: int | None,
@@ -1049,27 +1071,13 @@ def _near_dup_tagged(
         n_planes = planes_for_corpus(corpus_rows, target_bucket_size)
     if stats is not None:
         stats["n_planes"] = n_planes
-    table_planes = [
-        [hyperplane(t * n_planes + b, dim) for b in range(n_planes)]
-        for t in range(n_tables)
-    ]
     # candidates carry only the ids — verification re-joins the vectors
     # from df, so the exploded per-table stream stays narrow.
     return (
         spread(df)
         .select(
             F.col(id_col).alias("vid"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(t).alias("tbl"),
-                            lsh_bucket(F.col(vec_col), planes).alias("bucket"),
-                        )
-                        for t, planes in enumerate(table_planes)
-                    ]
-                )
-            ).alias("tb"),
+            lsh_table_tags(F.col(vec_col), n_planes, n_tables, dim).alias("tb"),
         )
         .select("vid", "tb.tbl", "tb.bucket")
     )

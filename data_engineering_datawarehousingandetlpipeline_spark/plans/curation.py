@@ -820,33 +820,28 @@ STREAM_SRCPAIR_MOD = 3  # doc_id % 3 == 0 subset keeps the e2e drain small
 
 
 def q_streaming_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-source dup matrix built INCREMENTALLY as shards land (r14).
+    """Cross-source dup matrix built INCREMENTALLY as shards land.
 
     The streaming twin of ``source_dup_matrix`` on the MINHASH detector:
     a document subset is staged as three range-sharded JSON files (the
-    Kafka stand-in, same adjudicated pattern as q_streaming_exact_dedup),
-    drained one file per micro-batch through
-    ``streaming/pipeline.start_source_pair_matrix`` — per batch, MinHash
-    bands for the NEW docs only, candidates against the accumulated
-    cross-batch index plus within-batch, exact verify on the hashed
-    token sets, pair rows landed through the exactly-once
-    batch_id-partitioned sink — then aggregated to the per-source-pair
-    matrix at read time. Every unordered near-dup pair is discovered
-    exactly once (at its later member's arrival), so the accumulated
-    pair set equals the BATCH LSH pair graph over the same subset; the
-    oracle states exactly that batch semantics (the shared MinHash SQL
-    chain restricted to the subset, aggregated like the batch matrix).
-    This is the contract that lets a data team keep the "which feeds
-    duplicate which" dashboard warm as crawls land, without re-pairing
-    the corpus.
+    Kafka stand-in, same pattern as q_streaming_exact_dedup), drained
+    one file per micro-batch through
+    ``streaming/pipeline.start_source_pair_matrix``, then aggregated to
+    the per-source-pair matrix at read time. Every unordered near-dup
+    pair is discovered exactly once (at its later member's arrival), so
+    the accumulated pair set equals the BATCH LSH pair graph over the
+    same subset; the oracle states exactly that batch semantics (the
+    shared MinHash SQL chain restricted to the subset, aggregated like
+    the batch matrix). This is the contract that lets a data team keep
+    the "which feeds duplicate which" dashboard warm as crawls land,
+    without re-pairing the corpus.
 
-    r16: after the drain the query COMPACTS the accumulated state + pair
-    sink (``compact_pair_matrix_state`` — the per-epoch ``batch_id=*``
-    partitions fold into one base each, the maintenance op that bounds a
-    long-running stream's O(epochs) state file growth) and reads the
-    matrix from the COMPACTED sink — so the driver's cross-engine hash
-    proves end to end that compaction is content-preserving, the same
-    way ``warehouse_compaction`` proves the table OPTIMIZE rung. The
+    After the drain the query COMPACTS the accumulated state + pair sink
+    (``compact_pair_matrix_state`` — the per-epoch ``batch_id=*``
+    partitions fold into one base each) and reads the matrix from the
+    COMPACTED sink, so the driver's cross-engine hash proves end to end
+    that compaction is content-preserving, the way
+    ``warehouse_compaction`` proves the table OPTIMIZE rung. The
     physical contract (folds happened, re-run is a no-op) is asserted
     loudly in-query.
     """

@@ -1281,36 +1281,27 @@ STREAM_EMB_MOD = 3  # vec_id % 3 == 0 subset keeps the e2e drain small
 
 
 def q_streaming_emb_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-dup pairs accumulated INCREMENTALLY as shards land
-    (r15): the dense-side twin of ``streaming_dup_matrix``, extending the
-    exactly-once cross-batch accumulation pattern to the embedding /
-    multimodal pipeline.
+    """Embedding near-dup pairs accumulated INCREMENTALLY as shards land:
+    the dense-side twin of ``streaming_dup_matrix``.
 
     An embedding subset is staged as three range-sharded PARQUET files
     (parquet, not JSON: float vectors must round-trip bit-exactly into
     the stream), drained one file per micro-batch through
-    ``streaming/pipeline.start_embedding_near_dup`` — per batch,
-    hyperplane LSH buckets for the NEW vectors only, candidates against
-    the accumulated cross-batch index plus within-batch, exact rounded
-    cosine verify, pair rows landed through the exactly-once
-    batch_id-partitioned sink. Every unordered near-dup pair is
-    discovered exactly once (at its later member's arrival), so the
-    accumulated pair set equals the BATCH LSH pair graph over the same
-    subset — the oracle states exactly that batch semantics
-    (``SQL_EMB_NEAR_DUP``'s bucket/verify chain restricted to the
-    subset). Plane count/tables are the registered batch constants
+    ``streaming/pipeline.start_embedding_near_dup``. Every unordered
+    near-dup pair is discovered exactly once (at its later member's
+    arrival), so the accumulated pair set equals the BATCH LSH pair
+    graph over the same subset — the oracle states exactly that batch
+    semantics (``SQL_EMB_NEAR_DUP``'s bucket/verify chain restricted to
+    the subset). Plane count/tables are the registered batch constants
     (``NEAR_DUP_PLANES``/``EMBED_TABLES``), so the index geometry — and
     therefore the candidate graph — is identical in all three places:
-    batch operator, stream, oracle. This is the contract that lets an
-    embedding dedup index stay warm as encoder shards land, without
-    re-pairing the corpus.
+    batch operator, stream, oracle.
 
-    r16: like ``streaming_dup_matrix``, the query compacts the
-    accumulated state + pair sink after the drain
-    (``compact_embedding_state``) and returns the pairs read from the
-    COMPACTED sink — the driver's hash proves the fold
-    content-preserving; the physical fold/no-op contract is asserted
-    loudly in-query.
+    Like ``streaming_dup_matrix``, the query compacts the accumulated
+    state + pair sink after the drain (``compact_embedding_state``) and
+    returns the pairs read from the COMPACTED sink — the driver's hash
+    proves the fold content-preserving; the physical fold/no-op contract
+    is asserted loudly in-query.
     """
     import os
     import tempfile

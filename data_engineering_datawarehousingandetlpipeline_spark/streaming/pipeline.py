@@ -20,8 +20,10 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
@@ -53,6 +55,24 @@ def _start(
     elif trigger_seconds:
         writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
     return writer.start()
+
+
+def _start_parquet(
+    frame: DataFrame,
+    out_dir: str,
+    checkpoint_dir: str,
+    available_now: bool,
+    trigger_seconds: int | None,
+) -> StreamingQuery:
+    """Start ``frame`` into the built-in parquet file sink at ``out_dir``:
+    its metadata log commits each micro-batch once, so a replayed batch
+    overwrites its own files (exactly-once output across restarts)."""
+    writer = (
+        frame.writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    return _start(writer, available_now, trigger_seconds)
 
 
 def clean_batch(batch: DataFrame) -> DataFrame:
@@ -196,7 +216,6 @@ def start_chunking(
     from data_engineering_datawarehousingandetlpipeline_spark.operators.text import (
         chunk_documents,
     )
-    from pyspark.sql import functions as F
 
     chunks = chunk_documents(
         source.select(F.col("doc_id").cast("long").alias("doc_id"), "text"),
@@ -204,12 +223,9 @@ def start_chunking(
         stride=stride,
         sort_output=False,
     )
-    writer = (
-        chunks.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start_parquet(
+        chunks, out_dir, checkpoint_dir, available_now, trigger_seconds
     )
-    return _start(writer, available_now, trigger_seconds)
 
 
 def start_exact_dedup(
@@ -240,18 +256,13 @@ def start_exact_dedup(
     bounded-window dedup (e.g. per-day shard replays) compose with
     ``withWatermark`` + ``dropDuplicatesWithinWatermark`` instead.
     """
-    from pyspark.sql import functions as F
-
     survivors = source.select(
         F.sha2(F.col("text"), 256).alias("text_hash"),
         F.length("text").cast("bigint").alias("n_chars"),
     ).dropDuplicates(["text_hash"])
-    writer = (
-        survivors.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start_parquet(
+        survivors, out_dir, checkpoint_dir, available_now, trigger_seconds
     )
-    return _start(writer, available_now, trigger_seconds)
 
 
 def start_minhash_dedup(
@@ -288,8 +299,6 @@ def start_minhash_dedup(
     dup-heavy crawls. The signature fold is one codegen stage per batch;
     nothing here shuffles except the dedup state exchange.
     """
-    from pyspark.sql import functions as F
-
     from data_engineering_datawarehousingandetlpipeline_spark.operators.dedup import (
         lsh_band_hashes,
         minhash_signatures,
@@ -304,12 +313,9 @@ def start_minhash_dedup(
         .select(F.col("band").cast("int").alias("band"), "band_hash")
         .dropDuplicates(["band", "band_hash"])
     )
-    writer = (
-        index.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start_parquet(
+        index, out_dir, checkpoint_dir, available_now, trigger_seconds
     )
-    return _start(writer, available_now, trigger_seconds)
 
 
 def start_windowed_minhash_dedup(
@@ -335,8 +341,6 @@ def start_windowed_minhash_dedup(
     expiry re-emits its buckets — downstream batch compaction of the
     index (a trivial DISTINCT) absorbs the rare late twins.
     """
-    from pyspark.sql import functions as F
-
     from data_engineering_datawarehousingandetlpipeline_spark.operators.dedup import (
         lsh_band_hashes,
         minhash_signatures,
@@ -362,12 +366,9 @@ def start_windowed_minhash_dedup(
         .dropDuplicatesWithinWatermark(["band", "band_hash"])
         .drop(event_time_col)
     )
-    writer = (
-        index.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start_parquet(
+        index, out_dir, checkpoint_dir, available_now, trigger_seconds
     )
-    return _start(writer, available_now, trigger_seconds)
 
 
 def start_windowed_exact_dedup(
@@ -394,8 +395,6 @@ def start_windowed_exact_dedup(
     state instead. Expiry semantics are pinned in
     tests/test_warehouse_streaming.py.
     """
-    from pyspark.sql import functions as F
-
     survivors = (
         source.select(
             F.sha2(F.col("text"), 256).alias("text_hash"),
@@ -405,12 +404,9 @@ def start_windowed_exact_dedup(
         .withWatermark(event_time_col, delay)
         .dropDuplicatesWithinWatermark(["text_hash"])
     )
-    writer = (
-        survivors.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start_parquet(
+        survivors, out_dir, checkpoint_dir, available_now, trigger_seconds
     )
-    return _start(writer, available_now, trigger_seconds)
 
 
 #: Default fan-out of the ``pfx`` sub-partition every accumulator state
@@ -419,11 +415,46 @@ def start_windowed_exact_dedup(
 #: partitions its own keys can collide with, instead of reading the
 #: whole accumulated corpus every epoch. Steady-state shards touch a
 #: subset of prefixes, so per-epoch read cost tracks the shard's key
-#: coverage; at full coverage (huge shards) the scan degrades to the
-#: pre-r16 full read, never worse. Raise it for larger corpora — more
-#: prefixes = finer pruning, at the cost of more (still bounded:
-#: partitions × prefixes) state files per epoch between compactions.
+#: coverage; at full coverage (huge shards) the scan degrades to a full
+#: read, never worse. Raise it for larger corpora — more prefixes =
+#: finer pruning, at the cost of more (still bounded: partitions ×
+#: prefixes) state files per epoch between compactions.
 DEFAULT_STATE_PREFIXES = 16
+
+
+class _StateLayout(NamedTuple):
+    """One cross-batch accumulator family's on-disk layout, declared once.
+
+    Under ``state_dir``, the ``keys`` dir holds the candidate-key rows
+    (deduped on ``key_cols``) and the ``items`` dir one payload row per
+    id (deduped on ``id_col``), both as ``batch_id=<epoch>/pfx=<k>/``;
+    the pair sink holds ``batch_id=<epoch>/`` partitions deduped on
+    ``pair_cols``."""
+
+    keys: str
+    key_cols: tuple[str, ...]
+    items: str
+    id_col: str
+    pair_cols: tuple[str, str]
+
+    def dirs(
+        self, state_dir: str, pairs_dir: str
+    ) -> dict[str, tuple[str, tuple[str, ...], bool]]:
+        """name → (path, dedup keys, pfx-partitioned) for every dir the
+        family writes; the names are the compactor's result keys."""
+        return {
+            self.keys: (os.path.join(state_dir, self.keys), self.key_cols, True),
+            self.items: (os.path.join(state_dir, self.items), (self.id_col,), True),
+            "pairs": (pairs_dir, self.pair_cols, False),
+        }
+
+
+#: :func:`start_source_pair_matrix`: LSH bands, token-hash docs, doc pairs.
+_TEXT_LAYOUT = _StateLayout("bands", ("doc", "band"), "docs", "doc", ("doc_a", "doc_b"))
+#: :func:`start_embedding_near_dup`: LSH buckets, vectors, vector pairs.
+_EMBEDDING_LAYOUT = _StateLayout(
+    "buckets", ("vid", "tbl"), "vecs", "vid", ("id_a", "id_b")
+)
 
 
 def _pfx(*cols, n_prefixes: int):
@@ -431,39 +462,17 @@ def _pfx(*cols, n_prefixes: int):
     into ``n_prefixes`` buckets. Deterministic across sessions (fixed
     seed), and computed identically at write and prune time — equal join
     keys land in (and are pruned to) equal prefixes."""
-    from pyspark.sql import functions as F
-
     return F.pmod(F.hash(*cols), F.lit(n_prefixes)).cast("int")
 
 
-def _committed_state_exists(spark: SparkSession, path: str) -> bool:
-    """True iff ``path`` holds at least one COMMITTED ``batch_id=*``
-    partition (a visible entry inside it). Probed explicitly via the
-    Hadoop FileSystem API — never by swallowing read exceptions: the r14
-    draft caught bare ``Exception`` around the read, so a transient
-    non-missing-path failure (corrupt file, permission) silently degraded
-    the batch to within-batch pairs only, and the exactly-once replay
-    made the shrunken pair graph sticky. With the probe, "no state yet"
-    is a filesystem FACT (root absent, or only a crashed first write's
-    hidden ``_temporary`` droppings), and every actual read failure
-    propagates — the batch fails loudly and the checkpoint retries it.
-
-    A visible entry may be a data file (flat layout: the pair sink) or a
-    ``pfx=*`` sub-partition directory (the prefix layout below) — both
-    appear only at job commit, when the committer moves output out of
-    ``_temporary``, so either one is proof of a committed write.
-
-    Shared by every cross-batch accumulator
-    (:func:`start_source_pair_matrix`, :func:`start_embedding_near_dup`).
-    """
-    return bool(_state_batch_ids(spark, path))
-
-
 def _state_batch_ids(spark: SparkSession, path: str) -> list[int]:
-    """The COMMITTED ``batch_id=*`` partition values under ``path``
-    (those holding at least one visible entry — see
-    :func:`_committed_state_exists`), sorted. Negative ids are compacted
-    bases (:func:`compact_accumulator_state`); positive ids are epochs."""
+    """The COMMITTED ``batch_id=*`` partition values under ``path``,
+    sorted. A partition counts once it holds a visible entry: a data
+    file (flat layout: the pair sink) or a ``pfx=*`` sub-partition
+    directory (the prefix layout). Both appear only at job commit, when
+    the committer moves output out of ``_temporary``, so a crashed
+    write's hidden droppings never count. Negative ids are compacted
+    bases (:func:`_compact_accumulator`); the others are epochs."""
     jvm = spark.sparkContext._jvm
     root = jvm.org.apache.hadoop.fs.Path(path)
     fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
@@ -489,8 +498,14 @@ def _read_prior_state(
     pfx_in: list[int] | None = None,
 ):
     """Accumulated state strictly below ``epoch_id``, or None when no
-    committed state exists yet (see :func:`_committed_state_exists` for
-    why this is an explicit probe, not an exception catch).
+    committed state exists yet.
+
+    "No state yet" is an explicit filesystem probe
+    (:func:`_state_batch_ids`), never a swallowed read error: a caught
+    failure (corrupt file, permission) would silently shrink the epoch
+    to within-batch pairs, and the exactly-once replay would make the
+    shrunken pair graph sticky. Every actual read failure propagates, so
+    the batch fails loudly and the checkpoint retries it.
 
     ``pfx_in`` prunes the scan to the named key-hash prefixes: the
     caller passes the (bounded, ≤ ``n_prefixes``) set of prefixes its
@@ -498,9 +513,7 @@ def _read_prior_state(
     every other state file — the scan cost tracks the shard, not the
     accumulated corpus. Compacted bases (negative ``batch_id``) always
     qualify as prior state: every folded epoch was < any live epoch."""
-    from pyspark.sql import functions as F
-
-    if not _committed_state_exists(spark, path):
+    if not _state_batch_ids(spark, path):
         return None  # genuine first batch: no committed state yet
     state = (
         spark.read.option("basePath", path)
@@ -549,8 +562,6 @@ def _fold_state_dir(
     epochs carries identical payload columns by contract, so keeping
     either copy preserves the state's content.
     """
-    from pyspark.sql import functions as F
-
     ids = [i for i in _state_batch_ids(spark, path) if i <= upto]
     if len(ids) <= 1:
         return 0
@@ -573,18 +584,21 @@ def _fold_state_dir(
 
 def _compact_accumulator(
     spark: SparkSession,
+    layout: _StateLayout,
+    state_dir: str,
+    pairs_dir: str,
     checkpoint_dir: str,
-    dirs: dict[str, tuple[str, tuple[str, ...], bool]],
 ) -> dict[str, int]:
     """Shared body of the two accumulator-state compactors: fold every
-    dir in ``dirs`` (name → (path, dedup keys, pfx-partitioned)) up to
-    the checkpoint's last COMMITTED epoch. Run on a QUIESCENT stream
-    (between drains / while the query is stopped), like any maintenance
-    op: folding is restricted to committed epochs so a crashed in-flight
-    epoch's partial partitions are left for its replay to overwrite, but
+    dir of ``layout`` up to the checkpoint's last COMMITTED epoch (dir
+    name → partitions folded). Run on a QUIESCENT stream (between drains
+    / while the query is stopped), like any maintenance op: folding is
+    restricted to committed epochs so a crashed in-flight epoch's
+    partial partitions are left for its replay to overwrite, but
     deleting a folded partition out from under a concurrently running
     batch's open scan would fail that batch (it would retry — correct,
     just wasteful)."""
+    dirs = layout.dirs(state_dir, pairs_dir)
     committed = _committed_batch_ids(checkpoint_dir)
     if not committed:
         return {name: 0 for name in dirs}
@@ -601,22 +615,16 @@ def compact_pair_matrix_state(
     """Compact :func:`start_source_pair_matrix`'s accumulated state+sink:
     fold the per-epoch ``batch_id=*`` partitions of bands/docs state and
     the pair sink into one base partition each (dir name → partitions
-    folded). The OPTIMIZE rung for accumulator state (r15 verdict #2):
-    without it a long-running stream accretes one small parquet
-    partition per epoch forever — per-epoch file listing grows
-    O(epochs) — while after a fold the listing is O(1) + epochs since
-    the last fold. Content-preserving by construction (key-dedup under
-    the same-payload contract) and idempotent; crash-safe via the
-    superset invariant (:func:`_fold_state_dir`). Quiescent-stream
-    maintenance, like ``WarehouseTable.compact_partitions``."""
+    folded). The OPTIMIZE rung for accumulator state: without it a
+    long-running stream accretes one small parquet partition per epoch
+    forever — per-epoch file listing grows O(epochs) — while after a
+    fold the listing is O(1) + epochs since the last fold.
+    Content-preserving by construction (key-dedup under the same-payload
+    contract) and idempotent; crash-safe via the superset invariant
+    (:func:`_fold_state_dir`). Quiescent-stream maintenance, like
+    ``WarehouseTable.compact_partitions``."""
     return _compact_accumulator(
-        spark,
-        checkpoint_dir,
-        {
-            "bands": (os.path.join(state_dir, "bands"), ("doc", "band"), True),
-            "docs": (os.path.join(state_dir, "docs"), ("doc",), True),
-            "pairs": (pairs_dir, ("doc_a", "doc_b"), False),
-        },
+        spark, _TEXT_LAYOUT, state_dir, pairs_dir, checkpoint_dir
     )
 
 
@@ -627,14 +635,125 @@ def compact_embedding_state(
     the dense twin of :func:`compact_pair_matrix_state` (buckets/vecs
     state + the cosine pair sink), same contract."""
     return _compact_accumulator(
-        spark,
-        checkpoint_dir,
-        {
-            "buckets": (os.path.join(state_dir, "buckets"), ("vid", "tbl"), True),
-            "vecs": (os.path.join(state_dir, "vecs"), ("vid",), True),
-            "pairs": (pairs_dir, ("id_a", "id_b"), False),
-        },
+        spark, _EMBEDDING_LAYOUT, state_dir, pairs_dir, checkpoint_dir
     )
+
+
+def _accumulate_epoch(
+    epoch_id: int,
+    keys_b: DataFrame,
+    items_b: DataFrame,
+    layout: _StateLayout,
+    state_dir: str,
+    pairs_dir: str,
+    collide: Column,
+    verify: Callable[[DataFrame], DataFrame],
+    n_prefixes: int,
+) -> None:
+    """One micro-batch of a cross-batch pair accumulator — the epoch body
+    :func:`start_source_pair_matrix` and :func:`start_embedding_near_dup`
+    share.
+
+    The family supplies its pinned shard rows: ``keys_b`` (``id_col``,
+    key columns, ``pfx``) and ``items_b`` (one payload row per id,
+    ``pfx``); its ``collide`` predicate over two key rows aliased ``x``
+    and ``y``; and ``verify``, which maps candidates joined to both
+    sides' payloads (aliased ``x``, the new member, and ``y``, its
+    partner) to thresholded pair rows keyed by ``layout.pair_cols``.
+
+    Candidates come two ways — new × new within the shard (``x < y``)
+    and new × accumulated keys of strictly earlier epochs (``x != y``) —
+    so every unordered pair is discovered exactly once, at the arrival
+    of its LATER member. The union over epochs therefore equals the
+    BATCH LSH pair graph over the same rows, which is what the oracles
+    state.
+
+    EXACTLY-ONCE: every write goes to a ``batch_id=<epoch>`` partition
+    with overwrite, and prior state is read strictly below the epoch,
+    which a replay cannot see differently — so a replayed epoch
+    deterministically rewrites its own partitions. This is the same
+    idempotent-by-batch-id contract ``merge_upsert`` provides for keyed
+    event tables, chosen here because pair rows carry no event time to
+    partition by.
+
+    PRUNING: state lives under ``batch_id=<epoch>/pfx=<key-hash %
+    n_prefixes>``. The key scan is pruned to the shard's own key
+    prefixes; the heavy payload scan to the candidate PARTNER ids'
+    prefixes (the new member is always served by ``items_b``). Per-epoch
+    read cost tracks the shard's key coverage and the LSH-bounded
+    candidate set, not the accumulated corpus.
+
+    RE-DELIVERY: the guards below, and compaction's key-dedup, are
+    lossless ONLY under the same-payload-per-id contract each public
+    docstring states; an id re-issued with CHANGED payload is a
+    different item wearing an old key and must re-key (content-hash ids
+    make the contract structural). An id delivered again would (1) pair
+    with its own earlier copy — the ``x != y`` guard drops that
+    self-pair, which no batch pair graph contains; (2) sit in the
+    payload state under two batch_ids, multiplying each of its verified
+    pairs — the key-only dedup on ``pair_cols`` is lossless because the
+    same id carries the same payload and so the same score; (3)
+    re-collide with partners whose pair was emitted when it first
+    arrived — the left-anti join against the accumulator's own sink
+    below this epoch drops those, shuffling on the pair key, bounded by
+    the emitted pair graph.
+    """
+    spark = keys_b.sparkSession
+    dirs = layout.dirs(state_dir, pairs_dir)
+    x_id, y_id = F.col(f"x.{layout.id_col}"), F.col(f"y.{layout.id_col}")
+
+    def candidates(partners: DataFrame, order: Column) -> DataFrame:
+        return (
+            keys_b.alias("x")
+            .join(partners.alias("y"), collide & order)
+            .select(x_id.alias("xid"), y_id.alias("yid"))
+        )
+
+    # the shard's own key prefixes (bounded: ≤ n_prefixes values,
+    # collected off the pinned frame) prune the prior key scan —
+    # colliding keys are equal keys, equal keys share a prefix
+    key_pfx = [r.pfx for r in keys_b.select("pfx").distinct().collect()]
+    prior_keys = _read_prior_state(
+        spark, dirs[layout.keys][0], epoch_id, pfx_in=key_pfx
+    )
+    cands = candidates(keys_b, x_id < y_id)
+    if prior_keys is not None:
+        cands = cands.unionByName(candidates(prior_keys, x_id != y_id))
+    # pinned: the candidate set is both collected from (partner prefixes)
+    # and joined through (verify) — without the pin the key joins would
+    # run twice
+    cands = cands.distinct().localCheckpoint(eager=True)
+
+    partner_pfx = [
+        r.pfx
+        for r in cands.select(_pfx("yid", n_prefixes=n_prefixes).alias("pfx"))
+        .distinct()
+        .collect()
+    ]
+    prior_items = _read_prior_state(
+        spark, dirs[layout.items][0], epoch_id, pfx_in=partner_pfx
+    )
+    items = items_b.drop("pfx")
+    if prior_items is not None:
+        items = items.unionByName(prior_items.select(items.columns))
+    joined = cands.join(items.alias("x"), F.col("xid") == x_id).join(
+        items.alias("y"), F.col("yid") == y_id
+    )
+    pair_cols = list(layout.pair_cols)
+    pair_rows = verify(joined).dropDuplicates(pair_cols)
+    prior_pairs = _read_prior_state(spark, pairs_dir, epoch_id)
+    if prior_pairs is not None:
+        pair_rows = pair_rows.join(
+            prior_pairs.select(pair_cols), pair_cols, "left_anti"
+        )
+
+    frames = {"pairs": pair_rows, layout.keys: keys_b, layout.items: items_b}
+    for name, frame in frames.items():
+        path, _, partitioned = dirs[name]
+        writer = frame.write.mode("overwrite")
+        if partitioned:
+            writer = writer.partitionBy("pfx")
+        writer.parquet(os.path.join(path, f"batch_id={epoch_id}"))
 
 
 def start_source_pair_matrix(
@@ -650,38 +769,22 @@ def start_source_pair_matrix(
     """Cross-batch SOURCE-PAIR accumulation: the streaming twin of the
     batch ``source_dup_matrix`` on the MinHash detector.
 
-    As document shards land, each micro-batch (1) folds MinHash
-    signatures + LSH bands + hashed token sets for ITS documents only,
-    (2) generates near-dup candidates two ways — new × accumulated index
-    (strictly earlier batches) and new × new within the batch — so every
-    unordered pair is discovered exactly once, at the arrival of its
-    LATER member, (3) verifies candidates exactly on the hashed
-    token-set arrays (identical arithmetic to
-    ``operators/dedup.minhash_near_dup_pairs``), and (4) lands the
-    verified pair rows plus its own band/doc state through an
-    EXACTLY-ONCE sink: every write goes to a ``batch_id=<epoch>``
-    partition with overwrite, so a replayed epoch deterministically
-    rewrites its own partition (prior state is filtered to
-    ``batch_id < epoch``, which a replay cannot see differently) — the
-    same idempotent-by-batch-id contract ``merge_upsert`` provides for
-    keyed event tables, chosen here because pair rows carry no event
-    time to partition by. Union over batches therefore equals the BATCH
-    LSH pair graph over the same documents, which is what the oracle
-    states.
+    Each micro-batch folds MinHash signatures, LSH bands and hashed token
+    sets for ITS documents only, band-collides them (the lossless size
+    prune inside the join condition) within the shard and against the
+    accumulated band state, verifies candidates exactly on the hashed
+    token-set arrays — identical arithmetic to
+    ``operators/dedup.minhash_near_dup_pairs``, so jaccard values
+    hash-match the oracle — and lands ``(doc_a, doc_b, source_a,
+    source_b, jaccard)`` pair rows plus its band/doc state through the
+    exactly-once epoch body (:func:`_accumulate_epoch`).
 
-    Scale shape per batch: signature fold is one codegen stage over the
-    shard; the candidate joins shuffle on (band, band_hash) with the
-    lossless size prune inside the condition — volume is
-    |shard bands| × collision rate, never corpus²; state grows by
-    O(|shard| × bands) rows per batch, exactly the batch operator's
-    index footprint. Prior-state READS are partition-pruned (r16):
-    state lives under ``batch_id=<epoch>/pfx=<key-hash % n_prefixes>``,
-    the bands scan is pruned to the new shard's own band prefixes and
-    the (heavy, token-array-carrying) docs scan to the candidate
-    PARTNER ids' prefixes — per-epoch read cost tracks the shard's key
-    coverage and the LSH-bounded candidate set, not the accumulated
-    corpus. Verify is O(|candidates| × doc size) on integer arrays. The
-    source-pair MATRIX itself is an aggregation the reader runs over
+    Scale shape per batch: the signature fold is one codegen stage over
+    the shard; the candidate joins shuffle on (band, band_hash) — volume
+    is |shard bands| × collision rate, never corpus²; state grows by
+    O(|shard| × bands) rows, exactly the batch operator's index
+    footprint; verify is O(|candidates| × doc size) on integer arrays.
+    The source-pair MATRIX itself is an aggregation the reader runs over
     the pair sink (append-only stream, no retractions); long-running
     streams bound state file counts with
     :func:`compact_pair_matrix_state` between drains.
@@ -689,17 +792,10 @@ def start_source_pair_matrix(
     RE-DELIVERY CONTRACT (same-payload-per-id): a ``doc_id`` delivered
     more than once MUST carry identical payload (text, source) on every
     delivery — the at-least-once transport retry/replay case this
-    accumulator is built for. All three re-delivery guards (the
-    ``doc != doc`` cross-join inequality, the key-only pair dedup, the
-    anti-join against the accumulator's own prior pairs) and state
-    compaction's key-dedup are lossless ONLY under that contract; an
-    upstream that re-issues an id with CHANGED content is a different
-    document wearing an old key, and must re-key (content-hash ids make
-    the contract structural). The same contract backs
-    ``WarehouseTable.merge_upsert``'s insert-if-absent semantics.
+    accumulator is built for (:func:`_accumulate_epoch` says why). The
+    same contract backs ``WarehouseTable.merge_upsert``'s
+    insert-if-absent semantics.
     """
-    from pyspark.sql import functions as F
-
     from data_engineering_datawarehousingandetlpipeline_spark.operators.dedup import (
         lsh_band_hashes,
         minhash_signatures,
@@ -708,16 +804,31 @@ def start_source_pair_matrix(
         token_hash_array,
     )
 
-    bands_dir = os.path.join(state_dir, "bands")
-    docs_dir = os.path.join(state_dir, "docs")
+    collide = (
+        (F.col("x.band") == F.col("y.band"))
+        & (F.col("x.band_hash") == F.col("y.band_hash"))
+        & size_prune_cond(F.col("x.n"), F.col("y.n"), threshold)
+    )
+
+    def verify(joined: DataFrame) -> DataFrame:
+        common = F.size(F.array_intersect(F.col("x.hv"), F.col("y.hv")))
+        return joined.select(
+            F.least("x.doc", "y.doc").alias("doc_a"),
+            F.greatest("x.doc", "y.doc").alias("doc_b"),
+            F.least("x.source", "y.source").alias("source_a"),
+            F.greatest("x.source", "y.source").alias("source_b"),
+            (
+                common.cast("double")
+                / (F.size("x.hv") + F.size("y.hv") - common).cast("double")
+            ).alias("jaccard"),
+        ).filter(F.col("jaccard") >= threshold)
 
     def _batch(batch: DataFrame, epoch_id: int) -> None:
-        spark = batch.sparkSession
         docs_b = batch.select(
             F.col("doc_id").cast("long").alias("doc_id"), "text", "source"
         )
         # one scan of the shard feeds signatures AND token-hash arrays;
-        # eager checkpoints pin both (each is joined more than once below)
+        # eager checkpoints pin both (each is joined more than once)
         sigs = minhash_signatures(docs_b, id_col="doc_id", carry_cols=("source",))
         bands_b = (
             lsh_band_hashes(sigs)
@@ -735,125 +846,16 @@ def start_source_pair_matrix(
             .withColumn("pfx", _pfx("doc", n_prefixes=n_prefixes))
             .localCheckpoint(eager=True)
         )
-
-        # the shard's own band prefixes (bounded: ≤ n_prefixes values,
-        # collected off the pinned frame) prune the prior bands scan —
-        # colliding keys are equal keys, equal keys share a prefix
-        band_pfx = [r.pfx for r in bands_b.select("pfx").distinct().collect()]
-        prior_bands = _read_prior_state(
-            spark, bands_dir, epoch_id, pfx_in=band_pfx
-        )
-
-        # band collision + the lossless size prune, on x/y dataset aliases
-        collide = (
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.band_hash") == F.col("y.band_hash"))
-            & size_prune_cond(F.col("x.n"), F.col("y.n"), threshold)
-        )
-
-        # within-batch candidates: doc order breaks the symmetry
-        within = (
-            bands_b.alias("x")
-            .join(bands_b.alias("y"), collide & (F.col("x.doc") < F.col("y.doc")))
-            .select(F.col("x.doc").alias("da"), F.col("y.doc").alias("db"))
-        )
-        cands = within
-        if prior_bands is not None:
-            # cross candidates: the new doc pairs with every earlier
-            # arrival it band-collides with — discovered exactly here,
-            # never again (neither member is "new" in a later batch).
-            # The doc inequality guards re-delivery: a doc_id arriving
-            # again in a later shard would otherwise pair with its own
-            # earlier copy and emit a doc_a == doc_b self-pair (j=1.0)
-            # that no batch pair graph contains.
-            cross = (
-                bands_b.alias("x")
-                .join(
-                    prior_bands.alias("y"),
-                    collide & (F.col("x.doc") != F.col("y.doc")),
-                )
-                .select(F.col("x.doc").alias("da"), F.col("y.doc").alias("db"))
-            )
-            cands = cands.unionByName(cross)
-        # pinned: the candidate set is both collected from (partner
-        # prefixes below) and joined through (verify) — without the pin
-        # the band joins would run twice
-        cands = cands.distinct().localCheckpoint(eager=True)
-
-        # verify on the hashed token sets of both sides (new side local,
-        # old side from the accumulated doc state) — same arithmetic as
-        # the batch operator, so jaccard values hash-match the oracle.
-        # The heavy docs-state scan (token-hash arrays) is pruned to the
-        # candidate PARTNER ids' prefixes: da is always a new-shard doc
-        # (served by hv_b), only db can live in prior state, and the
-        # LSH-bounded candidate set keeps this prefix list small at
-        # steady state
-        partner_pfx = [
-            r.pfx
-            for r in cands.select(
-                _pfx("db", n_prefixes=n_prefixes).alias("pfx")
-            )
-            .distinct()
-            .collect()
-        ]
-        prior_docs = _read_prior_state(
-            spark, docs_dir, epoch_id, pfx_in=partner_pfx
-        )
-        all_docs = hv_b if prior_docs is None else hv_b.select(
-            "doc", "source", "hv"
-        ).unionByName(prior_docs.select("doc", "source", "hv"))
-        a = all_docs.select(
-            F.col("doc").alias("da"), F.col("source").alias("sa"), F.col("hv").alias("ha")
-        )
-        b = all_docs.select(
-            F.col("doc").alias("db"), F.col("source").alias("sb"), F.col("hv").alias("hb")
-        )
-        common = F.size(F.array_intersect(F.col("ha"), F.col("hb")))
-        pair_rows = (
-            cands.join(a, "da")
-            .join(b, "db")
-            .select(
-                F.least("da", "db").alias("doc_a"),
-                F.greatest("da", "db").alias("doc_b"),
-                F.least("sa", "sb").alias("source_a"),
-                F.greatest("sa", "sb").alias("source_b"),
-                (
-                    common.cast("double")
-                    / (F.size("ha") + F.size("hb") - common).cast("double")
-                ).alias("jaccard"),
-            )
-            .filter(F.col("jaccard") >= threshold)
-            # a re-delivered doc_id sits in the doc state under two
-            # batch_ids; the verify join would multiply each of its pairs
-            # by the copy count. Same doc_id → same token set → same
-            # jaccard, so the key-only dedup is lossless.
-            .dropDuplicates(["doc_a", "doc_b"])
-        )
-        # a re-delivered doc_id also re-collides with partners whose pair
-        # was already emitted when IT was the new arrival — without this
-        # anti-join the pair union would carry cross-epoch duplicates.
-        # Prior pairs are the accumulator's own exactly-once sink below
-        # this epoch, so a replay reads the identical set; the anti-join
-        # shuffles on the pair key, bounded by the emitted pair graph.
-        prior_pairs = _read_prior_state(spark, pairs_dir, epoch_id)
-        if prior_pairs is not None:
-            pair_rows = pair_rows.join(
-                prior_pairs.select("doc_a", "doc_b"),
-                ["doc_a", "doc_b"],
-                "left_anti",
-            )
-
-        # exactly-once: each epoch owns its batch_id partition; replays
-        # overwrite the identical deterministic content. State lands
-        # pfx-partitioned so later epochs' reads prune (see above).
-        pair_rows.write.mode("overwrite").parquet(
-            os.path.join(pairs_dir, f"batch_id={epoch_id}")
-        )
-        bands_b.write.mode("overwrite").partitionBy("pfx").parquet(
-            os.path.join(bands_dir, f"batch_id={epoch_id}")
-        )
-        hv_b.write.mode("overwrite").partitionBy("pfx").parquet(
-            os.path.join(docs_dir, f"batch_id={epoch_id}")
+        _accumulate_epoch(
+            epoch_id,
+            bands_b,
+            hv_b,
+            _TEXT_LAYOUT,
+            state_dir,
+            pairs_dir,
+            collide,
+            verify,
+            n_prefixes,
         )
 
     writer = source.writeStream.foreachBatch(_batch).option(
@@ -878,69 +880,53 @@ def start_embedding_near_dup(
     trigger_seconds: int | None = DEFAULT_TRIGGER_SECONDS,
 ) -> StreamingQuery:
     """Cross-batch EMBEDDING near-dup accumulation: the streaming twin of
-    the batch ``operators/similarity.embedding_near_dup_pairs`` — the
-    embedding-side counterpart of :func:`start_source_pair_matrix`, so
-    the dense/multimodal pipeline accumulates incrementally the way the
-    text side does.
+    the batch ``operators/similarity.embedding_near_dup_pairs`` and the
+    dense counterpart of :func:`start_source_pair_matrix`.
 
-    As embedding shards land, each micro-batch (1) computes the
-    OR-amplified hyperplane LSH bucket ids for ITS vectors only (the
-    identical deterministic ``hyperplane``/``lsh_bucket`` arithmetic as
-    the batch operator, so buckets agree bit-for-bit with any engine that
-    replays the md5 plane construction), (2) generates candidates two
-    ways — new × accumulated index (strictly earlier batches, with the
-    re-delivery ``vid != vid`` guard) and new × new within the batch — so
-    every unordered pair is discovered exactly once, at its LATER
-    member's arrival, (3) verifies candidates with the exact rounded
-    cosine on the full vectors, and (4) lands verified pairs plus its own
-    bucket/vector state through the same EXACTLY-ONCE
-    ``batch_id=<epoch>`` partition-overwrite sink (prior state read
-    strictly below the epoch — a replay cannot see it differently).
-    Union over batches therefore equals the batch LSH pair graph over
-    the same vectors, which is what the oracle states.
+    Each micro-batch computes the OR-amplified hyperplane LSH buckets
+    for ITS vectors only (``similarity.lsh_table_tags``, the batch
+    operator's own expression, so buckets agree bit-for-bit with any
+    engine that replays the md5 plane construction), bucket-collides
+    them within the shard and against the accumulated bucket state,
+    verifies candidates with the exact rounded cosine on the full
+    vectors, and lands ``(id_a, id_b, cos_sim)`` pair rows plus its
+    bucket/vector state through the exactly-once epoch body
+    (:func:`_accumulate_epoch`).
 
-    Scale shape per batch: bucket fold is one codegen stage over the
+    Scale shape per batch: the bucket fold is one codegen stage over the
     shard (``n_tables`` struct expressions, one explode); candidate
     joins shuffle on (tbl, bucket) — volume is |shard buckets| ×
     collision rate, never corpus²; state grows O(|shard| × n_tables)
-    bucket rows + O(|shard|) vectors per batch. Prior-state READS are
-    partition-pruned the way the text accumulator's are (r16): state
-    lives under ``batch_id=<epoch>/pfx=<key-hash % n_prefixes>``, the
-    buckets scan pruned to the shard's own bucket prefixes and the
-    (heavy, vector-carrying) vecs scan to the candidate partner ids'
-    prefixes; :func:`compact_embedding_state` bounds state file counts
-    between drains. ``n_planes`` MUST be passed explicitly sized for
-    the eventual corpus (``similarity.planes_for_corpus``): a streaming
+    bucket rows + O(|shard|) vectors per batch;
+    :func:`compact_embedding_state` bounds state file counts between
+    drains. ``n_planes`` MUST be passed explicitly sized for the
+    eventual corpus (``similarity.planes_for_corpus``): a streaming
     accumulator cannot re-derive it later without re-bucketing all
     accumulated state.
 
     RE-DELIVERY CONTRACT (same-payload-per-id): a ``vec_id`` delivered
     more than once MUST carry the identical vector on every delivery —
-    the transport retry/replay case. The re-delivery guards
-    (``vid != vid``, key-only pair dedup, the prior-pairs anti-join)
-    and compaction's key-dedup are lossless ONLY under that contract;
-    a re-issued id with a CHANGED vector is a different embedding
-    wearing an old key and must re-key (content-hash ids make the
-    contract structural).
+    the transport retry/replay case (:func:`_accumulate_epoch` says why).
     """
-    from pyspark.sql import functions as F
-
     from data_engineering_datawarehousingandetlpipeline_spark.operators.similarity import (
         cosine,
-        hyperplane,
-        lsh_bucket,
+        lsh_table_tags,
     )
     from data_engineering_datawarehousingandetlpipeline_spark.session import spread
 
-    buckets_dir = os.path.join(state_dir, "buckets")
-    vecs_dir = os.path.join(state_dir, "vecs")
-    table_planes = [
-        [hyperplane(t * n_planes + b, dim) for b in range(n_planes)]
-        for t in range(n_tables)
-    ]
+    tags = lsh_table_tags(F.col("vec"), n_planes, n_tables, dim)
+    collide = (F.col("x.tbl") == F.col("y.tbl")) & (
+        F.col("x.bucket") == F.col("y.bucket")
+    )
+
+    def verify(joined: DataFrame) -> DataFrame:
+        return joined.select(
+            F.least("x.vid", "y.vid").alias("id_a"),
+            F.greatest("x.vid", "y.vid").alias("id_b"),
+            cosine(F.col("x.vec"), F.col("y.vec")).alias("cos_sim"),
+        ).filter(F.col("cos_sim") >= threshold)
 
     def _batch(batch: DataFrame, epoch_id: int) -> None:
-        spark = batch.sparkSession
         vecs_b = (
             spread(batch)
             .select(
@@ -951,110 +937,21 @@ def start_embedding_near_dup(
             .localCheckpoint(eager=True)
         )
         buckets_b = (
-            vecs_b.select(
-                "vid",
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(t).alias("tbl"),
-                                lsh_bucket(F.col("vec"), planes).alias(
-                                    "bucket"
-                                ),
-                            )
-                            for t, planes in enumerate(table_planes)
-                        ]
-                    )
-                ).alias("tb"),
-            )
+            vecs_b.select("vid", tags.alias("tb"))
             .select("vid", "tb.tbl", "tb.bucket")
             .withColumn("pfx", _pfx("tbl", "bucket", n_prefixes=n_prefixes))
             .localCheckpoint(eager=True)
         )
-
-        # shard's own bucket prefixes prune the prior buckets scan
-        bucket_pfx = [
-            r.pfx for r in buckets_b.select("pfx").distinct().collect()
-        ]
-        prior_buckets = _read_prior_state(
-            spark, buckets_dir, epoch_id, pfx_in=bucket_pfx
-        )
-
-        collide = (F.col("x.tbl") == F.col("y.tbl")) & (
-            F.col("x.bucket") == F.col("y.bucket")
-        )
-        within = (
-            buckets_b.alias("x")
-            .join(buckets_b.alias("y"), collide & (F.col("x.vid") < F.col("y.vid")))
-            .select(F.col("x.vid").alias("ia"), F.col("y.vid").alias("ib"))
-        )
-        cands = within
-        if prior_buckets is not None:
-            cross = (
-                buckets_b.alias("x")
-                .join(
-                    prior_buckets.alias("y"),
-                    collide & (F.col("x.vid") != F.col("y.vid")),
-                )
-                .select(F.col("x.vid").alias("ia"), F.col("y.vid").alias("ib"))
-            )
-            cands = cands.unionByName(cross)
-        # pinned: collected from (partner prefixes) and joined through
-        cands = cands.distinct().localCheckpoint(eager=True)
-
-        # the vector-carrying vecs scan prunes to candidate partner
-        # prefixes — ia is always new (served by vecs_b), only ib can
-        # live in prior state
-        partner_pfx = [
-            r.pfx
-            for r in cands.select(
-                _pfx("ib", n_prefixes=n_prefixes).alias("pfx")
-            )
-            .distinct()
-            .collect()
-        ]
-        prior_vecs = _read_prior_state(
-            spark, vecs_dir, epoch_id, pfx_in=partner_pfx
-        )
-        all_vecs = vecs_b if prior_vecs is None else vecs_b.select(
-            "vid", "vec"
-        ).unionByName(prior_vecs.select("vid", "vec"))
-        a = all_vecs.select(F.col("vid").alias("ia"), F.col("vec").alias("va"))
-        b = all_vecs.select(F.col("vid").alias("ib"), F.col("vec").alias("vb"))
-        pair_rows = (
-            cands.join(a, "ia")
-            .join(b, "ib")
-            .select(
-                F.least("ia", "ib").alias("id_a"),
-                F.greatest("ia", "ib").alias("id_b"),
-                cosine(F.col("va"), F.col("vb")).alias("cos_sim"),
-            )
-            .filter(F.col("cos_sim") >= threshold)
-            # a re-delivered vec_id sits in the vector state under two
-            # batch_ids; key-only dedup is lossless (same id → same
-            # vector → same cosine)
-            .dropDuplicates(["id_a", "id_b"])
-        )
-        # and it re-collides with partners whose pair was already emitted
-        # when IT arrived — anti-join against the exactly-once sink below
-        # this epoch keeps the pair union duplicate-free under any
-        # delivery (same contract as the text accumulator)
-        prior_pairs = _read_prior_state(spark, pairs_dir, epoch_id)
-        if prior_pairs is not None:
-            pair_rows = pair_rows.join(
-                prior_pairs.select("id_a", "id_b"),
-                ["id_a", "id_b"],
-                "left_anti",
-            )
-
-        pair_rows.write.mode("overwrite").parquet(
-            os.path.join(pairs_dir, f"batch_id={epoch_id}")
-        )
-        buckets_b.write.mode("overwrite").partitionBy("pfx").parquet(
-            os.path.join(buckets_dir, f"batch_id={epoch_id}")
-        )
-        vecs_b.write.mode("overwrite").partitionBy("pfx").parquet(
-            os.path.join(vecs_dir, f"batch_id={epoch_id}")
+        _accumulate_epoch(
+            epoch_id,
+            buckets_b,
+            vecs_b,
+            _EMBEDDING_LAYOUT,
+            state_dir,
+            pairs_dir,
+            collide,
+            verify,
+            n_prefixes,
         )
 
     writer = source.writeStream.foreachBatch(_batch).option(
@@ -1082,14 +979,13 @@ def start_scd2(
         stateful_scd2,
     )
 
-    writer = (
-        stateful_scd2(source)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start_parquet(
+        stateful_scd2(source),
+        out_dir,
+        checkpoint_dir,
+        available_now,
+        trigger_seconds,
     )
-    return _start(writer, available_now, trigger_seconds)
 
 
 def start_contract_monitor(
@@ -1125,10 +1021,6 @@ def start_contract_monitor(
     the monitor adds no shuffle beyond ``check_contract``'s one
     conditional-aggregate pass per micro-batch.
     """
-    import os
-
-    from pyspark.sql import functions as F
-
     from data_engineering_datawarehousingandetlpipeline_spark.operators.expectations import (
         check_contract,
     )
@@ -1186,8 +1078,6 @@ def start_native_sessions(
     micro-batch boundaries (same trade, and same loud documentation, as
     stateful_heartbeat); pass a nonzero delay for out-of-order sources.
     """
-    from pyspark.sql import functions as F
-
     sessions = (
         source.withWatermark("ts", watermark_delay)
         .groupBy("user_id", F.session_window("ts", gap).alias("w"))
@@ -1199,10 +1089,6 @@ def start_native_sessions(
             "n_events",
         )
     )
-    writer = (
-        sessions.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start_parquet(
+        sessions, out_dir, checkpoint_dir, available_now, trigger_seconds
     )
-    return _start(writer, available_now, trigger_seconds)
