@@ -32,9 +32,6 @@ from data_engineering_datawarehousingandetlpipeline_spark.plans.registry import 
 from data_engineering_datawarehousingandetlpipeline_spark.scratch import (
     materialized_result,
 )
-from data_engineering_datawarehousingandetlpipeline_spark.session import (
-    ensure_runtime_confs,
-)
 from data_engineering_datawarehousingandetlpipeline_spark.sources.readers import (
     load_table,
 )
@@ -55,7 +52,6 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is scan-bound and embarrassingly parallel: the shuffle
     carries 6 rows × partial states, not data.
     """
-    ensure_runtime_confs(spark)
     lineitem = load_table(spark, sf_dir, "lineitem")
     return (
         lineitem.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
@@ -99,7 +95,6 @@ def q_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast, so they add no shuffle. The groupBy reuses map-side partial
     aggregation into ~25 nation groups.
     """
-    ensure_runtime_confs(spark)
     lineitem = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
@@ -149,7 +144,6 @@ def q_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered (no full sort of the aggregate). Ties broken by c_custkey
     so the result set is deterministic for the oracle.
     """
-    ensure_runtime_confs(spark)
     lineitem = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
@@ -188,7 +182,6 @@ def q_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     output, and at scale the semi join benefits from AQE converting to
     broadcast when the filtered orders side is small.
     """
-    ensure_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-07-01 00:00:00").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-10-01 00:00:00").cast("timestamp"))
@@ -224,7 +217,6 @@ ORDER BY o_orderpriority
 
 def q_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shipped volume per supplier nation (lineitem ⋈ supplier ⋈ nation)."""
-    ensure_runtime_confs(spark)
     lineitem = load_table(spark, sf_dir, "lineitem")
     supplier = load_table(spark, sf_dir, "supplier")
     nation = load_table(spark, sf_dir, "nation")
@@ -258,7 +250,6 @@ ORDER BY supp_nation
 
 def q_part_type_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregate over the part dimension: price stats per brand/type."""
-    ensure_runtime_confs(spark)
     part = load_table(spark, sf_dir, "part")
     return (
         part.groupBy("p_brand", "p_type")
@@ -289,7 +280,6 @@ def q_top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     global sort. At 100 TB the single shuffle on o_custkey is the cost; a
     warehouse bucketed by custkey would eliminate it.
     """
-    ensure_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
@@ -318,7 +308,6 @@ ORDER BY o_custkey, rank_in_customer
 
 def q_revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP over (region, nation): subtotals + grand total in one pass."""
-    ensure_runtime_confs(spark)
     customer = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region")
@@ -355,7 +344,6 @@ def q_event_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over (event_type, day): all four grouping combinations in one
     pass, with GROUPING() markers disambiguating real NULLs from subtotal
     rows (the standard warehouse reporting shape alongside ROLLUP)."""
-    ensure_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events").select(
         "event_type", F.date_trunc("day", F.col("ts")).alias("day_ts"), "value"
     )
@@ -400,7 +388,6 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides of that final join are dimension-sized, so it broadcasts under
     AQE. No windows, no collect.
     """
-    ensure_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events").select(
         "user_id", F.to_date("ts").alias("day")
     )
@@ -472,7 +459,6 @@ def q_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     per stage with absolute counts and the conversion rate from the
     previous stage.
     """
-    ensure_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts"
     )
@@ -620,7 +606,6 @@ def q_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     run count; a power-law user concentrates one window partition, the
     same bounded-straggler compromise sessionization documents.
     """
-    ensure_runtime_confs(spark)
     return _scd2_history(spark, sf_dir).orderBy("user_id", "version")
 
 
@@ -690,7 +675,6 @@ def q_scd2_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed on (snapshot, state) finishes it; at 100 TB the fan-out is
     ≤ SNAP_DAYS rows per state change, linear in the dimension.
     """
-    ensure_runtime_confs(spark)
     hist = _scd2_history(spark, sf_dir)
     u0 = F.unix_micros(F.lit(SNAP_T0).cast("timestamp"))
     spans = (
@@ -776,7 +760,6 @@ def q_incremental_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     exists to be the in-plan oracle — production maintains the state
     table and runs only the delta day + union.
     """
-    ensure_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events").select(
         "event_type", F.date_trunc("day", F.col("ts")).alias("__day"), "user_id"
     )
@@ -851,7 +834,6 @@ def q_streaming_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         start_scd2,
     )
 
-    ensure_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events").filter(F.expr(STREAM_SCD2_PRED))
     staged = events.select(
         "user_id",
@@ -957,7 +939,6 @@ def q_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broadcast). Production runs only the delta branch + merge;
     the full-recompute branch exists to be the in-plan oracle.
     """
-    ensure_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events").select(
         "event_type", "ts", "value"
     )
@@ -1090,7 +1071,6 @@ def q_event_rolling_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     level shift after dead-flat history needs its own detector, which is
     the documented Hampel trade.
     """
-    ensure_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", "value"
     )
@@ -1178,7 +1158,6 @@ def q_incremental_star_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     × days) states, never rows; verification joins two 5-row aggregates.
     Production stores the closed states and runs only the delta branch.
     """
-    ensure_runtime_confs(spark)
     lineitem = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
@@ -1314,7 +1293,6 @@ def q_lineitem_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the HLL path ``approx_sketches`` demonstrates) when ±2% suffices —
     the oracle needs exactness, a production profile usually doesn't.
     """
-    ensure_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     cnt = li.agg(F.count("*").alias("n_rows"))
     branches = []
@@ -1395,7 +1373,6 @@ def q_daily_active_cumulative(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregations over one events scan (pinned (user, day) activity pairs
     feed both), then a window cumsum over the tiny per-day table.
     """
-    ensure_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events").select(
         "user_id", F.to_date("ts").alias("day")
     )
@@ -1466,7 +1443,6 @@ def q_scd2_event_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id; dimension rows per user are bounded by the user's version
     count — the plan a 100 TB fact table wants.
     """
-    ensure_runtime_confs(spark)
     from data_engineering_datawarehousingandetlpipeline_spark.operators import (
         joins,
     )
@@ -1543,7 +1519,6 @@ def q_event_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     join) and is pinned so the events scan happens once. No value
     arithmetic — LOCF copies doubles verbatim, so no rounding is needed.
     """
-    ensure_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events").select(
         "user_id", F.to_date("ts").alias("day"), "ts", "event_id", "value"
     )
@@ -1636,7 +1611,6 @@ def q_lineitem_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         expectations as X,
     )
 
-    ensure_runtime_confs(spark)
     lineitem = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     row_checks = X.check_contract(
@@ -1732,7 +1706,6 @@ def q_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     lateness flag is computed before the exchange instead of shipping
     two timestamps.
     """
-    ensure_runtime_confs(spark)
     lineitem = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_shipdate"
     )
@@ -1823,7 +1796,6 @@ def q_customer_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         table_diff,
     )
 
-    ensure_runtime_confs(spark)
     old = load_table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
     kept = old.filter(F.col("c_custkey") % DIFF_DELETE_MOD != 0)
     revised = kept.withColumn(
@@ -1901,7 +1873,6 @@ def q_silence_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB events table wants; output is bounded by the silent-user
     count.
     """
-    ensure_runtime_confs(spark)
     wm = F.lit(SILENCE_WATERMARK).cast("timestamp")
     return (
         load_table(spark, sf_dir, "events")
@@ -1961,7 +1932,6 @@ def q_event_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         grouped_rank,
     )
 
-    ensure_runtime_confs(spark)
     ev = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("value").isNotNull())
@@ -2028,7 +1998,6 @@ def q_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined shuffle of lineitem by suppkey into a dim-sized
     aggregate; everything after is dim-sized.
     """
-    ensure_runtime_confs(spark)
     lineitem = load_table(spark, sf_dir, "lineitem")
     supplier = load_table(spark, sf_dir, "supplier")
     rev = (
@@ -2082,7 +2051,6 @@ def q_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     at any scale. At 100 TB: one shuffle of the brand-filtered lineitems,
     full stop.
     """
-    ensure_runtime_confs(spark)
     lineitem = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     brand_parts = part.filter(F.col("p_brand") == "Brand#1").select("p_partkey")
@@ -2123,7 +2091,6 @@ def q_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     only fact-sized work is the map-side-combined lineitem aggregate —
     the IN-subquery's second scan and second aggregation are gone.
     """
-    ensure_runtime_confs(spark)
     lineitem = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
@@ -2172,7 +2139,6 @@ def q_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation dim. At 100 TB: one customer-keyed anti-join shuffle is the
     only fact-sized exchange.
     """
-    ensure_runtime_confs(spark)
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     nation = load_table(spark, sf_dir, "nation")
@@ -2224,7 +2190,6 @@ def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     materializing the full aggregate. At 100 TB the only fact-sized work
     is the orderkey-keyed aggregate of the filtered join.
     """
-    ensure_runtime_confs(spark)
     lineitem = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1996-07-01 00:00:00").cast("timestamp")
     )
@@ -2271,7 +2236,6 @@ def q_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     picks broadcast vs shuffle by size). Decimal-anchored sums make the
     final one-op division bit-identical across engines.
     """
-    ensure_runtime_confs(spark)
     lineitem = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-09-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-10-01 00:00:00").cast("timestamp"))
@@ -2309,7 +2273,6 @@ def q_disjunctive_band_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     IN-list and size floor to the part scan, the quantity bounds to the
     lineitem scan) so row groups skip before the join even sees them.
     """
-    ensure_runtime_confs(spark)
     lineitem = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity", "l_extendedprice", "l_discount"
     )
@@ -2360,7 +2323,6 @@ def q_nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both sums are decimal-anchored, so the per-year division and the
     6-dp round agree across engines.
     """
-    ensure_runtime_confs(spark)
     lineitem = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
@@ -2410,7 +2372,6 @@ def q_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a union of two plans; the ship-year comes off the lineitem row
     (no orders re-scan). Output is bounded: 2 directions × years.
     """
-    ensure_runtime_confs(spark)
     lineitem = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
@@ -2483,7 +2444,6 @@ def q_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame
     priority filter belongs INSIDE the join's right side, not a WHERE
     after it — a post-join filter would turn the outer join inner.
     """
-    ensure_runtime_confs(spark)
     customer = load_table(spark, sf_dir, "customer").select("c_custkey")
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") != "1-URGENT"
@@ -2531,7 +2491,6 @@ def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     so both engines tie-break identical values, never near-equal doubles;
     :func:`binary_round` rounds exactly as the oracle's ``round`` does.
     """
-    ensure_runtime_confs(spark)
     wanted = (
         load_table(spark, sf_dir, "part")
         .filter((F.col("p_type") == "STANDARD") & (F.col("p_size") <= 10))
@@ -2603,7 +2562,6 @@ def q_nation_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     is an equi-join on a key, and the only fact-sized shuffle is the
     orderkey join.)
     """
-    ensure_runtime_confs(spark)
     widgets = (
         load_table(spark, sf_dir, "part")
         .filter(F.col("p_name").contains("widget"))
@@ -2670,7 +2628,6 @@ def q_part_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined partkey shuffle; everything after is
     dimension-sized.
     """
-    ensure_runtime_confs(spark)
     lineitem = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_name")
     pr = (
@@ -2730,7 +2687,6 @@ def q_part_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation; part joins on the natural key with AQE choosing the
     strategy.
     """
-    ensure_runtime_confs(spark)
     lineitem = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey"
     )
@@ -2787,7 +2743,6 @@ def q_referral_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly how an iterative `large-star` style expansion behaves, but
     expressed declaratively so Catalyst owns the loop body.
     """
-    ensure_runtime_confs(spark)
     load_table(spark, sf_dir, "customer").createOrReplaceTempView(
         "referral_rollup_customer"
     )
@@ -2871,7 +2826,6 @@ def q_referral_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     schedules (never touches rows), and convergence-based stopping would
     read one aggregated delta per iteration, still O(1) driver data.
     """
-    ensure_runtime_confs(spark)
     customer = load_table(spark, sf_dir, "customer")
     nodes = customer.select(F.col("c_custkey").alias("id"))
     edges = (
@@ -2958,7 +2912,6 @@ def q_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     adaptation (Q1-Q22; partsupp-dependent ones reshaped onto lineitem
     as documented per query).
     """
-    ensure_runtime_confs(spark)
     lineitem = load_table(spark, sf_dir, "lineitem")
     return lineitem.filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
@@ -3000,7 +2953,6 @@ def q_late_shipment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the single orderkey-keyed fact-fact shuffle dominates and
     the output is 2 rows.
     """
-    ensure_runtime_confs(spark)
     lineitem = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
@@ -3087,7 +3039,6 @@ def q_excess_volume_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     one (partkey, suppkey) shuffle; everything after is bounded by
     |parts| × avg suppliers-per-part.
     """
-    ensure_runtime_confs(spark)
     promo = (
         load_table(spark, sf_dir, "part")
         .filter(F.col("p_type") == "PROMO")

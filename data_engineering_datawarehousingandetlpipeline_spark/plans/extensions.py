@@ -41,9 +41,6 @@ from data_engineering_datawarehousingandetlpipeline_spark.plans.registry import 
 from data_engineering_datawarehousingandetlpipeline_spark.scratch import (
     materialized_result,
 )
-from data_engineering_datawarehousingandetlpipeline_spark.session import (
-    ensure_runtime_confs,
-)
 from data_engineering_datawarehousingandetlpipeline_spark.sources.readers import (
     load_table,
 )
@@ -101,12 +98,10 @@ SQL_TOKS = r"regexp_split_to_array(trim(lower(text)), '\s+')"
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_runtime_confs(spark)
     return load_table(spark, sf_dir, "documents")
 
 
 def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_runtime_confs(spark)
     return load_table(spark, sf_dir, "embeddings")
 
 

@@ -29,9 +29,6 @@ from data_engineering_datawarehousingandetlpipeline_spark.plans.registry import 
 from data_engineering_datawarehousingandetlpipeline_spark.scratch import (
     materialized_result,
 )
-from data_engineering_datawarehousingandetlpipeline_spark.session import (
-    ensure_runtime_confs,
-)
 from data_engineering_datawarehousingandetlpipeline_spark.sources.readers import (
     load_table,
 )
@@ -49,7 +46,6 @@ def q_pivot_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-query) and the output schema static — required at scale and for
     the oracle's CASE-based twin.
     """
-    ensure_runtime_confs(spark)
     return _wide_daily(spark, sf_dir).orderBy("day_ts")
 
 
@@ -91,7 +87,6 @@ def q_event_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-NULL) values, which a direct aggregation either never had or
     reports as NULL.
     """
-    ensure_runtime_confs(spark)
     wide = _wide_daily(spark, sf_dir)
     return (
         wide.unpivot(["day_ts"], list(EVENT_TYPES), "event_type", "sum_value")
@@ -118,7 +113,6 @@ def q_long_term_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract (the reference materialized a dict of per-station frames —
     a pandas-ism replaced by one ordered frame).
     """
-    ensure_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     return (
         events.filter(F.col("user_id").isin(*USER_WHITELIST))
@@ -142,7 +136,6 @@ def q_salted_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials spread across 16 salt buckets before combining, so one hot
     key cannot pin a reducer at scale.
     """
-    ensure_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     out = salted_agg(
         events,
@@ -192,7 +185,6 @@ def q_salted_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         salted_join,
     )
 
-    ensure_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
@@ -228,7 +220,6 @@ def q_streaming_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the intended batch semantics — hour floor + keep-last per (key, hour) —
     so the comparison verifies the streaming path's *semantics*.
     """
-    ensure_runtime_confs(spark)
     from data_engineering_datawarehousingandetlpipeline_spark.streaming.pipeline import (
         read_json_file_stream,
         run_available,
@@ -298,7 +289,6 @@ def q_event_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     subtotal rows (grouping columns pre-projected — a computed alias
     inline in the grouping expression breaks ``F.grouping``).
     """
-    ensure_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events").select(
         "event_type", F.to_date("ts").alias("day"), "value"
     )
@@ -339,7 +329,6 @@ def q_click_days_no_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     subquery per row; both sides aggregate before joining so the join
     input is |user-days|, not |events|.
     """
-    ensure_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     day = F.to_date("ts").alias("day")
     clicks = (
@@ -383,7 +372,6 @@ def q_user_day_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         day_bounds_utc,
     )
 
-    ensure_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     s1, e1 = day_bounds_utc(DASHBOARD_DAY)
     s2, e2 = day_bounds_utc(DASHBOARD_DAY + dt.timedelta(days=1))
@@ -437,7 +425,6 @@ def q_streaming_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         windowed_stats,
     )
 
-    ensure_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events").filter(F.col("user_id") < 5)
     staged = events.select(
         "user_id",
@@ -499,7 +486,6 @@ def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         stateful_sessions,
     )
 
-    ensure_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events").filter(F.col("user_id") < 5)
     staged = events.select(
         "user_id",
@@ -560,7 +546,6 @@ def q_asof_last_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     The merge-scan as-of (operators/joins.py) — one shuffle on user_id, no
     inequality join — versus DuckDB's native ASOF LEFT JOIN as the oracle.
     """
-    ensure_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     clicks = events.filter(F.col("event_type") == "click").select(
         "event_id", "user_id", "ts"
@@ -597,7 +582,6 @@ def q_nearby_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
     into an equi-join with ≤3× replication — the 100 TB-safe plan — while
     the oracle states it as a plain BETWEEN join.
     """
-    ensure_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     views = events.filter(F.col("event_type") == "view").select(
         "event_id", "user_id", "ts"
@@ -638,7 +622,6 @@ def q_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same query swaps in ``approx_percentile`` (t-digest sketch, one
     pass, mergeable) with an error budget instead of an oracle match.
     """
-    ensure_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     return (
         events.groupBy("event_type")
@@ -676,7 +659,6 @@ def q_user_rolling_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    ensure_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     w3 = (
         Window.partitionBy("user_id")
@@ -731,7 +713,6 @@ def q_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics as a lag/cumsum window construction — the comparison proves
     the built-in matches the explicit SQL definition.
     """
-    ensure_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     return (
         events.groupBy(
@@ -782,7 +763,6 @@ def q_value_correlations(spark: SparkSession, sf_dir: str) -> DataFrame:
     corr / covar_samp / stddev_samp share their textbook definitions with
     DuckDB; rounding to 6 dp absorbs accumulation-order float drift.
     """
-    ensure_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     hour = F.hour(F.col("ts")).cast("double")
     return (
@@ -820,7 +800,6 @@ def q_doc_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     already shortlisted; the doc_id bound stands in for that shortlist.
     Integer output → exact cross-engine match.
     """
-    ensure_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") < EDIT_DISTANCE_DOCS
     )
@@ -881,7 +860,6 @@ def q_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     verification harness, not the production sketch path (which is the
     single groupBy scan).
     """
-    ensure_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events").select(
         "event_type", "user_id", "value"
     )
@@ -999,7 +977,6 @@ def q_streaming_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         start_contract_monitor,
     )
 
-    ensure_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events").filter(
         F.expr(STREAM_CONTRACT_PRED)
     )
@@ -1110,7 +1087,6 @@ def q_warehouse_skipping_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         WarehouseTable,
     )
 
-    ensure_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events").filter(
         F.col("user_id") < 5
     ).select("event_id", "user_id", "ts", "value")
@@ -1163,7 +1139,6 @@ def q_sliding_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     k ∈ 0..3 (both engines' buckets are epoch-aligned; the session zone
     is whole-hour offset so the 15-minute grids coincide).
     """
-    ensure_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events").filter(
         F.col("event_type") == "purchase"
     )
@@ -1216,7 +1191,6 @@ def q_warehouse_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         WarehouseTable,
     )
 
-    ensure_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events").filter(
         F.col("user_id") < 5
     ).select("event_id", "user_id", "ts", "value")
@@ -1278,7 +1252,6 @@ def q_warehouse_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         WarehouseTable,
     )
 
-    ensure_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events").filter(
         F.col("user_id") < 5
     ).select("event_id", "user_id", "ts", "value")
@@ -1355,7 +1328,6 @@ def q_warehouse_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         WarehouseTable,
     )
 
-    ensure_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events").filter(
         F.col("user_id") < 5
     ).select("event_id", "user_id", "ts", "value")
@@ -1478,7 +1450,6 @@ def q_warehouse_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_bucketed,
     )
 
-    ensure_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("orderkey"), "o_orderpriority"
     )
@@ -1576,7 +1547,6 @@ def q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         enrich_stream,
     )
 
-    ensure_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     profile = events.groupBy("user_id").agg(
         dsum("value").alias("lifetime_value"),
@@ -1649,7 +1619,6 @@ def q_streaming_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         attribution_join,
     )
 
-    ensure_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     staged = events.select(
         "event_id",

@@ -49,9 +49,6 @@ from data_engineering_datawarehousingandetlpipeline_spark.functions.numeric impo
     sql_dsum,
 )
 from data_engineering_datawarehousingandetlpipeline_spark.plans.registry import QuerySpec
-from data_engineering_datawarehousingandetlpipeline_spark.session import (
-    ensure_runtime_confs,
-)
 from data_engineering_datawarehousingandetlpipeline_spark.sources.readers import (
     load_table,
 )
@@ -83,7 +80,6 @@ _DAY_START, _DAY_END = day_bounds_utc(DASHBOARD_DAY)
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_runtime_confs(spark)
     return load_table(spark, sf_dir, "events")
 
 
@@ -99,7 +95,6 @@ def q_day_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_events_range,
     )
 
-    ensure_runtime_confs(spark)
     return (
         load_events_range(spark, sf_dir, _DAY_START, _DAY_END)
         .select("event_id", "user_id", "event_type", "value", "ts")
@@ -128,7 +123,6 @@ def q_dashboard_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_events_range,
     )
 
-    ensure_runtime_confs(spark)
     day = load_events_range(spark, sf_dir, _DAY_START, _DAY_END)
     caption = day.agg(
         F.count("*").alias("n_rows"),

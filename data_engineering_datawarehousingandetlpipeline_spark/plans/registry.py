@@ -6,14 +6,26 @@ compares the two (row count + schema + order-insensitive value hash), so:
 - every computed column is aliased identically on both sides,
 - every float aggregate is decimal-anchored (functions/numeric.py),
 - result orderings carry a deterministic tiebreaker.
+
+Every query assumes the engine's session confs (``session.RUNTIME_CONFS``:
+UTC timezone, parquet timestamp reads, AQE). The registry is where they are
+pinned: each ``QuerySpec.fn`` that :func:`all_queries` hands out applies
+them to the session it is given before it builds its plan, so a driver's
+own session gets the same results as ``get_spark``'s.
 """
 
 from __future__ import annotations
 
+import dataclasses
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from data_engineering_datawarehousingandetlpipeline_spark.session import (
+    ensure_runtime_confs,
+)
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -30,14 +42,10 @@ class QuerySpec:
     tags: tuple[str, ...] = field(default=())
 
 
-#: The 22 TPC-H plan-shape adaptations (Q1..Q22, in Q order) — bench.py's
-#: second calm-timed tier (r8 verdict, marching order 5). The headline
-#: 22-query bench set predates this family, so the star-join /
-#: decorrelation plans only ever got once-warm TIMINGS numbers; this
-#: tier runs them under the same 2-warmup/interleaved-best-of-4 protocol
-#: as the headline set, reported beside (never inside) the historical
-#: anchor series. Membership is pinned here (each query's docstring
-#: carries its Qn citation) and cross-checked by a registry test.
+#: The 22 TPC-H plan-shape adaptations, in Q order (each query's docstring
+#: cites its Qn; a registry test cross-checks the two). ``bench.py`` times
+#: them as its second tier, beside the headline ``bench=True`` set, and
+#: ``perfbench``'s tpch workload runs them as one pass.
 TPCH_SHAPES: tuple[str, ...] = (
     "pricing_summary",            # Q1
     "min_cost_supplier",          # Q2
@@ -66,7 +74,8 @@ TPCH_SHAPES: tuple[str, ...] = (
 
 def all_queries() -> dict[str, QuerySpec]:
     """Assemble the full query surface from the plan modules, in module
-    order. A name registered twice fails loudly."""
+    order. A name registered twice fails loudly. Each spec's ``fn`` pins
+    the engine's runtime confs on its session before building the plan."""
     from data_engineering_datawarehousingandetlpipeline_spark.plans import (
         analytics,
         curation,
@@ -80,5 +89,16 @@ def all_queries() -> dict[str, QuerySpec]:
         for spec in module.QUERIES:
             if spec.name in specs:
                 raise ValueError(f"duplicate query name: {spec.name}")
-            specs[spec.name] = spec
+            specs[spec.name] = dataclasses.replace(spec, fn=_pinned(spec.fn))
     return specs
+
+
+def _pinned(fn: QueryFn) -> QueryFn:
+    """``fn`` with :func:`ensure_runtime_confs` applied to its session first."""
+
+    @functools.wraps(fn)
+    def pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
+        ensure_runtime_confs(spark)
+        return fn(spark, sf_dir)
+
+    return pinned

@@ -7,8 +7,12 @@ here is the Spark-side replacement. Two entry points:
   UTC, shuffle parallelism sized to the machine instead of the 200 default).
 - :func:`ensure_runtime_confs` hardens an *externally provided* session
   (the driver passes its own) by setting the runtime-settable confs every
-  query in this engine assumes: UTC session timezone (timestamp comparisons
-  vs. the DuckDB oracle are wrong otherwise) and AQE.
+  query in this engine assumes (:data:`RUNTIME_CONFS`): UTC session
+  timezone (timestamp comparisons vs. the DuckDB oracle are wrong
+  otherwise), the parquet timestamp reads, and AQE. Its one per-query
+  call site is the query registry: every ``QuerySpec.fn`` that
+  ``plans.registry.all_queries()`` hands out applies it before building
+  its plan, so plan functions never pin confs themselves.
 
 :func:`get_spark` also sizes Spark's generated-class cache
 (``spark.sql.codegen.cache.maxEntries``, default 100) to
@@ -39,6 +43,10 @@ RUNTIME_CONFS: dict[str, str] = {
     # Read them as plain TIMESTAMP — with the UTC session tz above, the
     # wall-clock values ARE the UTC instants, matching the DuckDB oracle.
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    # Older corpus vintages write TIMESTAMP(NANOS), which the Spark reader
+    # rejects; read it as raw int64 nanos (sources.readers converts it the
+    # way DuckDB reads TIMESTAMP_NS). Spark itself never writes that type.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # AQE: runtime shuffle-partition coalescing + skew-join splitting —
     # the levers that keep the same plan healthy from sf0.001 to 100 TB.
     "spark.sql.adaptive.enabled": "true",
@@ -171,8 +179,10 @@ def get_spark(
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
+    # getOrCreate applies these to a reused session too, so the returned
+    # session holds RUNTIME_CONFS either way.
     for key, value in RUNTIME_CONFS.items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    return ensure_runtime_confs(spark)
+    return spark

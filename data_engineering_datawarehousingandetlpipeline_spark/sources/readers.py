@@ -72,10 +72,12 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     absolute path, with the file's (inode, mtime ns, size). Later reads
     of the unchanged file pass that schema and start no job. Directories
     and missing paths are read as plain ``spark.read.parquet`` every time.
-    The timestamp confs are pinned before the lookup, so a cached schema
-    was inferred under the same confs the read runs with.
+
+    Reads assume the engine's confs (``session.RUNTIME_CONFS``: parquet
+    timestamps as plain TIMESTAMP, TIMESTAMP(NANOS) as raw nanos), which
+    ``get_spark`` and the query registry pin before any plan reads. So a
+    cached schema was inferred under the same confs the read runs with.
     """
-    _pin_parquet_timestamp_confs(spark)
     try:
         st = os.stat(path)
     except OSError:
@@ -91,27 +93,6 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     evict_dead_sessions(_SCHEMA_CACHE, key[0])
     _SCHEMA_CACHE[key] = (fingerprint, df.schema)
     return df
-
-
-def _pin_parquet_timestamp_confs(spark: SparkSession) -> None:
-    """Make parquet timestamps read as plain TIMESTAMP across data vintages.
-
-    The corpus has shipped in two layouts: TIMESTAMP(NANOS) (needs
-    ``nanosAsLong`` or the reader rejects the file) and timestamp[us] with
-    isAdjustedToUTC=false (Spark 4 would infer TIMESTAMP_NTZ, breaking
-    instant functions like ``unix_micros``). Both confs are runtime-settable;
-    with the session tz pinned to UTC the resulting TIMESTAMP values are the
-    same instants DuckDB sees as naive timestamps.
-    """
-    for key in (
-        "spark.sql.legacy.parquet.nanosAsLong",
-        "spark.sql.parquet.inferTimestampNTZ.enabled",
-    ):
-        want = "true" if key.endswith("nanosAsLong") else "false"
-        try:
-            spark.conf.set(key, want)
-        except Exception:  # pragma: no cover - conf locked by the host
-            pass
 
 
 def _load_events(spark: SparkSession, path: str, ts_range=None) -> DataFrame:

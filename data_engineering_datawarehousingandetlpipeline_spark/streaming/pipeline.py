@@ -19,7 +19,7 @@ source in tests (same downstream pipeline, driver-image has no Kafka jars).
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -228,6 +228,35 @@ def start_chunking(
     )
 
 
+def _content_keys(source: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
+    """The exact-dedup projection: sha256 content hash plus the per-content
+    ``n_chars`` (equal among all copies), then the ``carry`` columns."""
+    return source.select(
+        F.sha2(F.col("text"), 256).alias("text_hash"),
+        F.length("text").cast("bigint").alias("n_chars"),
+        *carry,
+    )
+
+
+def _band_keys(source: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
+    """The near-dup projection: each document's MinHash signature folded
+    and banded into ``(band int, band_hash)`` keys, then the ``carry``
+    columns."""
+    from data_engineering_datawarehousingandetlpipeline_spark.operators.dedup import (
+        lsh_band_hashes,
+        minhash_signatures,
+    )
+
+    sigs = minhash_signatures(
+        source.select(F.col("doc_id").cast("long").alias("doc_id"), "text", *carry),
+        id_col="doc_id",
+        carry_cols=carry,
+    )
+    return lsh_band_hashes(sigs).select(
+        F.col("band").cast("int").alias("band"), "band_hash", *carry
+    )
+
+
 def start_exact_dedup(
     source: DataFrame,
     out_dir: str,
@@ -256,10 +285,7 @@ def start_exact_dedup(
     bounded-window dedup (e.g. per-day shard replays) compose with
     ``withWatermark`` + ``dropDuplicatesWithinWatermark`` instead.
     """
-    survivors = source.select(
-        F.sha2(F.col("text"), 256).alias("text_hash"),
-        F.length("text").cast("bigint").alias("n_chars"),
-    ).dropDuplicates(["text_hash"])
+    survivors = _content_keys(source).dropDuplicates(["text_hash"])
     return _start_parquet(
         survivors, out_dir, checkpoint_dir, available_now, trigger_seconds
     )
@@ -299,20 +325,7 @@ def start_minhash_dedup(
     dup-heavy crawls. The signature fold is one codegen stage per batch;
     nothing here shuffles except the dedup state exchange.
     """
-    from data_engineering_datawarehousingandetlpipeline_spark.operators.dedup import (
-        lsh_band_hashes,
-        minhash_signatures,
-    )
-
-    sigs = minhash_signatures(
-        source.select(F.col("doc_id").cast("long").alias("doc_id"), "text"),
-        id_col="doc_id",
-    )
-    index = (
-        lsh_band_hashes(sigs)
-        .select(F.col("band").cast("int").alias("band"), "band_hash")
-        .dropDuplicates(["band", "band_hash"])
-    )
+    index = _band_keys(source).dropDuplicates(["band", "band_hash"])
     return _start_parquet(
         index, out_dir, checkpoint_dir, available_now, trigger_seconds
     )
@@ -341,27 +354,8 @@ def start_windowed_minhash_dedup(
     expiry re-emits its buckets — downstream batch compaction of the
     index (a trivial DISTINCT) absorbs the rare late twins.
     """
-    from data_engineering_datawarehousingandetlpipeline_spark.operators.dedup import (
-        lsh_band_hashes,
-        minhash_signatures,
-    )
-
-    sigs = minhash_signatures(
-        source.select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            "text",
-            F.col(event_time_col),
-        ),
-        id_col="doc_id",
-        carry_cols=(event_time_col,),
-    )
     index = (
-        lsh_band_hashes(sigs)
-        .select(
-            F.col("band").cast("int").alias("band"),
-            "band_hash",
-            F.col(event_time_col),
-        )
+        _band_keys(source, (event_time_col,))
         .withWatermark(event_time_col, delay)
         .dropDuplicatesWithinWatermark(["band", "band_hash"])
         .drop(event_time_col)
@@ -396,11 +390,7 @@ def start_windowed_exact_dedup(
     tests/test_warehouse_streaming.py.
     """
     survivors = (
-        source.select(
-            F.sha2(F.col("text"), 256).alias("text_hash"),
-            F.length("text").cast("bigint").alias("n_chars"),
-            F.col(event_time_col),
-        )
+        _content_keys(source, (event_time_col,))
         .withWatermark(event_time_col, delay)
         .dropDuplicatesWithinWatermark(["text_hash"])
     )
@@ -465,20 +455,21 @@ def _pfx(*cols, n_prefixes: int):
     return F.pmod(F.hash(*cols), F.lit(n_prefixes)).cast("int")
 
 
-def _state_batch_ids(spark: SparkSession, path: str) -> list[int]:
-    """The COMMITTED ``batch_id=*`` partition values under ``path``,
-    sorted. A partition counts once it holds a visible entry: a data
-    file (flat layout: the pair sink) or a ``pfx=*`` sub-partition
-    directory (the prefix layout). Both appear only at job commit, when
-    the committer moves output out of ``_temporary``, so a crashed
-    write's hidden droppings never count. Negative ids are compacted
-    bases (:func:`_compact_accumulator`); the others are epochs."""
+def _state_partition_ids(spark: SparkSession, path: str) -> Iterator[int]:
+    """The COMMITTED ``batch_id=*`` partition values under ``path``, in
+    listing order, each partition's children listed only when the caller
+    asks for the next id. A partition counts once it holds a visible
+    entry: a data file (flat layout: the pair sink) or a ``pfx=*``
+    sub-partition directory (the prefix layout). Both appear only at job
+    commit, when the committer moves output out of ``_temporary``, so a
+    crashed write's hidden droppings never count. Negative ids are
+    compacted bases (:func:`_compact_accumulator`); the others are
+    epochs."""
     jvm = spark.sparkContext._jvm
     root = jvm.org.apache.hadoop.fs.Path(path)
     fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
     if not fs.exists(root):
-        return []
-    ids = []
+        return
     for part in fs.listStatus(root):
         name = part.getPath().getName()
         if not name.startswith("batch_id="):
@@ -487,8 +478,7 @@ def _state_batch_ids(spark: SparkSession, path: str) -> list[int]:
             is_visible_data_file(f.getPath().getName())
             for f in fs.listStatus(part.getPath())
         ):
-            ids.append(int(name.removeprefix("batch_id=")))
-    return sorted(ids)
+            yield int(name.removeprefix("batch_id="))
 
 
 def _read_prior_state(
@@ -500,8 +490,9 @@ def _read_prior_state(
     """Accumulated state strictly below ``epoch_id``, or None when no
     committed state exists yet.
 
-    "No state yet" is an explicit filesystem probe
-    (:func:`_state_batch_ids`), never a swallowed read error: a caught
+    "No state yet" is an explicit filesystem probe that stops at the
+    first committed partition (:func:`_state_partition_ids`), never a
+    swallowed read error: a caught
     failure (corrupt file, permission) would silently shrink the epoch
     to within-batch pairs, and the exactly-once replay would make the
     shrunken pair graph sticky. Every actual read failure propagates, so
@@ -513,7 +504,7 @@ def _read_prior_state(
     every other state file — the scan cost tracks the shard, not the
     accumulated corpus. Compacted bases (negative ``batch_id``) always
     qualify as prior state: every folded epoch was < any live epoch."""
-    if not _state_batch_ids(spark, path):
+    if next(_state_partition_ids(spark, path), None) is None:
         return None  # genuine first batch: no committed state yet
     state = (
         spark.read.option("basePath", path)
@@ -562,7 +553,7 @@ def _fold_state_dir(
     epochs carries identical payload columns by contract, so keeping
     either copy preserves the state's content.
     """
-    ids = [i for i in _state_batch_ids(spark, path) if i <= upto]
+    ids = sorted(i for i in _state_partition_ids(spark, path) if i <= upto)
     if len(ids) <= 1:
         return 0
     new_base = min(min(ids), 0) - 1

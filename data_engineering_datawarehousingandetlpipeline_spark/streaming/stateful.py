@@ -90,6 +90,16 @@ def windowed_stats(
     )
 
 
+def _epoch_us(pdfs: Iterator[pd.DataFrame], ts_col: str) -> list[int]:
+    """Every ``ts_col`` value of the batches as epoch µs (integer math from
+    here on), from datetime64 of any unit."""
+    return [
+        int(v) // 1_000
+        for pdf in pdfs
+        for v in pd.to_datetime(pdf[ts_col]).astype("datetime64[ns]").astype("int64")
+    ]
+
+
 def stateful_sessions(
     events: DataFrame,
     gap_seconds: int = DEFAULT_GAP_SECONDS,
@@ -114,14 +124,7 @@ def stateful_sessions(
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        ts_us: list[int] = []
-        for pdf in pdfs:
-            # datetime64[ns/us] → epoch µs; integer math from here on.
-            ts_us.extend(
-                int(v) // 1_000
-                for v in pd.to_datetime(pdf[ts_col]).astype("datetime64[ns]").astype("int64")
-            )
-        ts_us.sort()
+        ts_us = sorted(_epoch_us(pdfs, ts_col))
         if state.exists:
             start, last, n = state.get
         else:
@@ -170,99 +173,6 @@ def stateful_sessions(
         SESSION_STATE_SCHEMA,
         "append",
         GroupStateTimeout.NoTimeout,
-    )
-
-
-def stateful_sessions_v2(
-    events: DataFrame,
-    gap_seconds: int = DEFAULT_GAP_SECONDS,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """The SAME gap sessionization on the state API v2
-    (``transformWithStateInPandas`` + ``StatefulProcessor``, Spark 4).
-
-    Why both rungs exist: v1 (``applyInPandasWithState``) is the widely
-    deployed API; v2 is its successor with composable named state
-    (value/list/map), timers, and initial-state support — the surface
-    new stateful operators should target. The session logic is
-    IDENTICAL (one open session per key in a ValueState, closed sessions
-    emitted in append mode), and the equivalence pytest drains the same
-    shards through both rungs and requires identical output — the
-    migration-safety proof a team needs before moving operators to v2.
-
-    Environment note: the v2 state protocol speaks protobuf between the
-    JVM and the Python state server; this image has no
-    ``google.protobuf``, so the equivalence test carries a LOUD skip
-    (the Kafka/Delta-jars pattern) — the operator itself is complete and
-    runs wherever protobuf is installed.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    gap_us = int(gap_seconds) * 1_000_000
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._open = handle.getValueState(
-                "open_session", SESSION_STATE_SCHEMA
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            ts_us: list[int] = []
-            for pdf in rows:
-                ts_us.extend(
-                    int(v) // 1_000
-                    for v in pd.to_datetime(pdf[ts_col])
-                    .astype("datetime64[ns]")
-                    .astype("int64")
-                )
-            ts_us.sort()
-            if self._open.exists():
-                start, last, n = self._open.get()
-            else:
-                start = last = None
-                n = 0
-            closed: list[tuple[int, int, int]] = []
-            for t in ts_us:  # same transitions as stateful_sessions (v1)
-                if last is None:
-                    start, last, n = t, t, 1
-                elif t < start - gap_us:
-                    closed.append((t, t, 1))
-                elif t - last > gap_us:
-                    closed.append((start, last, n))
-                    start, last, n = t, t, 1
-                else:
-                    start = min(start, t)
-                    last = max(last, t)
-                    n += 1
-            self._open.update((start, last, n))
-            if closed:
-                yield pd.DataFrame(
-                    [
-                        (
-                            key[0],
-                            pd.Timestamp(s, unit="us"),
-                            pd.Timestamp(e, unit="us"),
-                            c,
-                        )
-                        for s, e, c in closed
-                    ],
-                    columns=[
-                        "user_id", "session_start", "session_end", "n_events"
-                    ],
-                )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy(user_col).transformWithStateInPandas(
-        SessionProcessor(),
-        outputStructType=SESSION_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
     )
 
 
@@ -334,14 +244,7 @@ def stateful_heartbeat(
                 columns=["user_id", "last_seen", "silent_at", "n_events"],
             )
             return
-        ts_us: list[int] = []
-        for pdf in pdfs:
-            ts_us.extend(
-                int(v) // 1_000
-                for v in pd.to_datetime(pdf[ts_col])
-                .astype("datetime64[ns]")
-                .astype("int64")
-            )
+        ts_us = _epoch_us(pdfs, ts_col)
         last, n = state.get if state.exists else (0, 0)
         last = max([last, *ts_us])
         n += len(ts_us)

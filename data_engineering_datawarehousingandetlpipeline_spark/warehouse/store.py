@@ -82,7 +82,7 @@ def is_visible_data_file(name: str) -> bool:
     (``_temporary``, ``_SUCCESS``, ``.crc``), the rule Spark's own file
     index applies. :meth:`WarehouseTable.data_files` (and every count
     built on it) and the streaming state probe
-    (``streaming.pipeline._state_batch_ids``) both use it."""
+    (``streaming.pipeline._state_partition_ids``) both use it."""
     return not name.startswith(("_", "."))
 
 

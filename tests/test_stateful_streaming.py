@@ -409,63 +409,3 @@ def test_heartbeat_alarms_equal_batch_silence_report(spark, tmp_path):
         assert got.last_seen == want.last_seen, uid
         assert got.silent_at == want.silent_at, uid
         assert got.n_events == want.n_events, uid
-
-
-def test_sessions_v2_matches_v1_exactly(spark, tmp_path):
-    """State API v2 (transformWithStateInPandas) must produce the SAME
-    closed sessions as the v1 operator on a multi-batch drain — the
-    migration-safety equivalence proof.
-
-    LOUD environment skip (same class as the Kafka/Delta jars): the v2
-    state protocol speaks protobuf between the JVM and the Python state
-    server, and this image carries no ``google.protobuf`` (verified: the
-    query fails in StateMessage_pb2 import, not in operator code). On an
-    image with protobuf installed this test runs as-is.
-    """
-    import importlib.util
-
-    import pytest as _pytest
-
-    try:  # find_spec raises when even the parent 'google' pkg is absent
-        has_protobuf = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        has_protobuf = False
-    if not has_protobuf:
-        _pytest.skip(
-            "transformWithStateInPandas needs google.protobuf (absent in "
-            "image) — state-v2 equivalence not runnable here"
-        )
-    from data_engineering_datawarehousingandetlpipeline_spark.streaming.stateful import (
-        stateful_sessions_v2,
-    )
-
-    indir = tmp_path / "events"
-    indir.mkdir()
-    _write(indir / "b1.json", [
-        {"user_id": 1, "ts": "2024-03-01T10:00:00Z"},
-        {"user_id": 1, "ts": "2024-03-01T10:10:00Z"},
-        {"user_id": 2, "ts": "2024-03-01T09:00:00Z"},
-        {"user_id": 2, "ts": "2024-03-01T13:00:00Z"},
-    ])
-    _write(indir / "b2.json", [
-        {"user_id": 1, "ts": "2024-03-01T12:10:00Z"},
-        {"user_id": 2, "ts": "2024-03-01T09:05:00Z"},  # cross-batch straggler
-    ])
-
-    def drain(op, name):
-        source = (
-            spark.readStream.schema(EVENTS_DDL)
-            .option("maxFilesPerTrigger", "1")
-            .json(str(indir))
-        )
-        _drain_append(op(source, gap_seconds=30 * 60), name)
-        return sorted(
-            (r.user_id, r.session_start.isoformat(),
-             r.session_end.isoformat(), r.n_events)
-            for r in spark.table(name).collect()
-        )
-
-    v1 = drain(stateful_sessions, "sessions_v1_eq")
-    v2 = drain(stateful_sessions_v2, "sessions_v2_eq")
-    assert v1 == v2
-    assert len(v1) >= 2  # non-trivial: cross-batch close + straggler
