@@ -5,6 +5,13 @@ Contract (driver): run at ``$SPARK_GRAFT_SF_DIR`` (default
 ``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]``; output
 ``{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}``.
 
+``python bench.py NAME [NAME ...]`` times exactly those registered queries
+as one tier under the same protocol and prints
+``{"queries": {...}, "sf": ..., "cores": ...}``: the isolate timing. A
+scale check is two such runs, one per ``SPARK_GRAFT_CPUS`` or
+``SPARK_GRAFT_SF_DIR`` value (``tools/stage_replicas.py`` stages a 4×
+corpus).
+
 Each query executes fully through a ``noop`` write (no driver collect, no
 files) — the standard way to measure plan execution cost rather than
 result-serialization cost.
@@ -24,7 +31,10 @@ from data_engineering_datawarehousingandetlpipeline_spark.plans import all_queri
 from data_engineering_datawarehousingandetlpipeline_spark.plans.registry import (
     TPCH_SHAPES,
 )
-from data_engineering_datawarehousingandetlpipeline_spark.session import get_spark
+from data_engineering_datawarehousingandetlpipeline_spark.session import (
+    default_parallelism,
+    get_spark,
+)
 
 
 def _time_tier(spark, sf_dir: str, specs: dict) -> dict[str, float]:
@@ -63,13 +73,22 @@ def _time_tier(spark, sf_dir: str, specs: dict) -> dict[str, float]:
     return {n: round(t, 3) for n, t in timings.items()}
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
+    names = sys.argv[1:] if argv is None else argv
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     match = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(match.group(1).rstrip(".")) if match else None
 
-    spark = get_spark(app_name="dwh-spark-bench")
     queries = all_queries()
+    unknown = sorted(set(names) - set(queries))
+    if unknown:
+        sys.exit(f"unknown query names: {', '.join(unknown)}")
+    spark = get_spark(app_name="dwh-spark-bench")
+    if names:
+        timings = _time_tier(spark, sf_dir, {n: queries[n] for n in names})
+        cores = default_parallelism()
+        print(json.dumps({"queries": timings, "sf": sf, "cores": cores}))
+        return
 
     # Tier 1 — the historical 22-query headline set (the anchor series the
     # driver compares round-over-round; membership and protocol unchanged

@@ -2743,25 +2743,25 @@ def q_referral_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly how an iterative `large-star` style expansion behaves, but
     expressed declaratively so Catalyst owns the loop body.
     """
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "referral_rollup_customer"
-    )
+    # the frame binds as a query parameter, not a named view: the caller's
+    # catalog is left as it was
     return spark.sql(
         f"""
         WITH RECURSIVE chain AS (
           SELECT c_custkey AS custkey, c_custkey AS root,
                  0 AS depth, c_acctbal AS bal
-          FROM referral_rollup_customer WHERE c_custkey <= 9
+          FROM {{customer}} WHERE c_custkey <= 9
           UNION ALL
           SELECT c.c_custkey, ch.root, ch.depth + 1, c.c_acctbal
-          FROM referral_rollup_customer c
+          FROM {{customer}} c
           JOIN chain ch ON c.c_custkey DIV 10 = ch.custkey
           WHERE c.c_custkey >= 10
         )
         SELECT root, COUNT(*) AS n_members, MAX(depth) AS max_depth,
                {sql_dsum("bal")} AS total_balance
         FROM chain GROUP BY root ORDER BY root
-        """
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
     )
 
 

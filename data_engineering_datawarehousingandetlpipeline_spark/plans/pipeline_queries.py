@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,6 +33,33 @@ from data_engineering_datawarehousingandetlpipeline_spark.scratch import (
 from data_engineering_datawarehousingandetlpipeline_spark.sources.readers import (
     load_table,
 )
+
+
+def _drained_result(
+    stream: DataFrame, prefix: str, mode: str, order: list[str], workdir: str
+) -> DataFrame:
+    """Drain ``stream`` with ``availableNow`` into a memory sink and return
+    its rows ordered by ``order``, pinned off ``workdir``
+    (:func:`materialized_result`).
+
+    The sink's temporary view holds the drained rows for the life of the
+    session, so it is dropped once the result is pinned: the caller's
+    catalog is left as it was."""
+    spark = stream.sparkSession
+    name = f"{prefix}_{uuid.uuid4().hex}"
+    query = (
+        stream.writeStream.outputMode(mode)
+        .format("memory")
+        .queryName(name)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        query.awaitTermination()
+        return materialized_result(spark.table(name).orderBy(*order), workdir)
+    finally:
+        spark.catalog.dropTempView(name)
+
 
 #: fixed pivot columns — the corpus's five event types (deterministic order).
 EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
@@ -419,8 +447,6 @@ def q_streaming_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation's semantics equal the batch semantics (the decimal-
     anchored average makes the values micro-batch-split-independent).
     """
-    import uuid
-
     from data_engineering_datawarehousingandetlpipeline_spark.streaming.stateful import (
         windowed_stats,
     )
@@ -439,18 +465,9 @@ def q_streaming_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = spark.readStream.schema(
         "user_id long, ts timestamp, value double"
     ).json(indir)
-    name = f"win_stats_{uuid.uuid4().hex}"
-    query = (
-        windowed_stats(stream, ts_col="ts", key_col="user_id", value_col="value")
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return materialized_result(
-        spark.table(name).orderBy("window_start", "user_id"), workdir
+    return _drained_result(
+        windowed_stats(stream, ts_col="ts", key_col="user_id", value_col="value"),
+        "win_stats", "complete", ["window_start", "user_id"], workdir,
     )
 
 
@@ -480,8 +497,6 @@ def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparison proves the cross-batch stateful operator computes the
     same sessions the batch window construction does.
     """
-    import uuid
-
     from data_engineering_datawarehousingandetlpipeline_spark.streaming.stateful import (
         stateful_sessions,
     )
@@ -495,18 +510,9 @@ def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     indir = os.path.join(workdir, "incoming")
     staged.coalesce(1).write.mode("overwrite").json(indir)
     stream = spark.readStream.schema("user_id long, ts timestamp").json(indir)
-    name = f"sessions_{uuid.uuid4().hex}"
-    query = (
-        stateful_sessions(stream, gap_seconds=SESSION_GAP_SECONDS)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return materialized_result(
-        spark.table(name).orderBy("user_id", "session_start"), workdir
+    return _drained_result(
+        stateful_sessions(stream, gap_seconds=SESSION_GAP_SECONDS),
+        "sessions", "append", ["user_id", "session_start"], workdir,
     )
 
 
@@ -1443,8 +1449,6 @@ def q_warehouse_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     staging here is test-scale plumbing, a production warehouse writes
     the bucketed layout at ingestion.
     """
-    import uuid
-
     from data_engineering_datawarehousingandetlpipeline_spark.warehouse.bucketing import (
         co_located_join,
         write_bucketed,
@@ -1462,7 +1466,13 @@ def q_warehouse_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = uuid.uuid4().hex[:8]
     t_orders, t_items = f"bj_orders_{tag}", f"bj_items_{tag}"
     n_buckets = 8
-    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    saved = {
+        key: spark.conf.get(key, None)
+        for key in (
+            "spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.legacy.bucketedTableScan.outputOrdering",
+        )
+    }
     try:
         write_bucketed(
             orders, t_orders, bucket_col="orderkey", n_buckets=n_buckets,
@@ -1507,10 +1517,11 @@ def q_warehouse_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             workdir,
         )
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-        spark.conf.set(
-            "spark.sql.legacy.bucketedTableScan.outputOrdering", "false"
-        )
+        for key, value in saved.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
         for t in (t_orders, t_items):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
@@ -1541,8 +1552,6 @@ def q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract; in this corpus every user has a profile, which is what
     lets the oracle state the plain batch join).
     """
-    import uuid
-
     from data_engineering_datawarehousingandetlpipeline_spark.streaming.joins import (
         enrich_stream,
     )
@@ -1568,16 +1577,7 @@ def q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     enriched = enrich_stream(stream, profile, ["user_id"]).select(
         "event_id", "user_id", "value", "lifetime_value", "n_user_events"
     )
-    name = f"enrich_{uuid.uuid4().hex}"
-    query = (
-        enriched.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return materialized_result(spark.table(name).orderBy("event_id"), workdir)
+    return _drained_result(enriched, "enrich", "append", ["event_id"], workdir)
 
 
 SQL_STREAMING_ENRICH = f"""
@@ -1613,8 +1613,6 @@ def q_streaming_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     the declared interval semantics (the integral ``gap_us`` pins the
     time arithmetic cross-engine).
     """
-    import uuid
-
     from data_engineering_datawarehousingandetlpipeline_spark.streaming.joins import (
         attribution_join,
     )
@@ -1638,17 +1636,8 @@ def q_streaming_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream.filter(F.col("event_type") == "purchase"),
         horizon_seconds=ATTRIBUTION_HORIZON_S,
     )
-    name = f"attr_{uuid.uuid4().hex}"
-    query = (
-        pairs.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return materialized_result(
-        spark.table(name).orderBy("purchase_id", "click_id"), workdir
+    return _drained_result(
+        pairs, "attr", "append", ["purchase_id", "click_id"], workdir
     )
 
 

@@ -85,6 +85,30 @@ def test_bucketed_join_has_no_exchange(spark, bucketed_tables):
         )
 
 
+def test_bucketed_join_query_restores_session_confs(spark):
+    """``warehouse_bucketed_join`` disables broadcasts and turns on the
+    bucket-sorted scan for its own join, then restores what the caller had
+    rather than a fixed value."""
+    from data_engineering_datawarehousingandetlpipeline_spark.plans import all_queries
+
+    keys = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.legacy.bucketedTableScan.outputOrdering",
+    )
+    saved = {key: spark.conf.get(key, None) for key in keys}
+    spark.conf.set(keys[1], "true")
+    try:
+        all_queries()["warehouse_bucketed_join"].fn(spark, SF_DIR)
+        assert spark.conf.get(keys[0]) == saved[keys[0]]
+        assert spark.conf.get(keys[1]) == "true"
+    finally:
+        for key, value in saved.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+
+
 def test_bucketed_aggregation_has_no_exchange(spark, bucketed_tables):
     left, _ = bucketed_tables
     from pyspark.sql import functions as F

@@ -18,14 +18,23 @@ from tests.conftest import SF_DIR, assert_matches_oracle
 SPECS = all_queries()
 
 
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
 @pytest.mark.parametrize("name", sorted(SPECS))
 def test_query_matches_oracle(spark, oracle, name):
+    """Each query matches its oracle and leaves the caller's temporary
+    views as it found them: a drain's memory-sink view would hold its rows
+    for the life of the session."""
     spec = SPECS[name]
+    views = _temp_views(spark)
     if spec.oracle is None:
         df = spec.fn(spark, "/root/testdata/sf0.001")
         assert df.count() >= 0  # rows-only check, like the driver's
-        return
-    assert_matches_oracle(spark, oracle, spec.fn, spec.oracle)
+    else:
+        assert_matches_oracle(spark, oracle, spec.fn, spec.oracle)
+    assert _temp_views(spark) == views
 
 
 #: A driver's own session, contradicting every conf the engine's results

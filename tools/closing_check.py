@@ -16,9 +16,12 @@ Checks, in order, fail-fast:
 1. the registry imports and exposes the full driver contract
    (``__spark_entry__.queries()`` / ``oracle_sql()`` — the exact call
    the driver makes first);
-2. ``pytest --collect-only -q`` collects every test module (collection
+2. ``bench.py`` and every ``tools/*.py`` module import, so a tool left
+   pointing at a removed package symbol fails here (each keeps its work
+   under ``__main__``, so importing one runs nothing);
+3. ``pytest --collect-only -q`` collects every test module (collection
    errors are how the r10 break surfaced in CI);
-3. (unless --fast) the driver's smoke: ``entry(spark)`` returns the
+4. (unless --fast) the driver's smoke: ``entry(spark)`` returns the
    6-row pricing summary on sf0.001.
 
 Exit 0 = safe to snapshot. Any other exit = DO NOT COMMIT the snapshot.
@@ -26,6 +29,7 @@ Exit 0 = safe to snapshot. Any other exit = DO NOT COMMIT the snapshot.
 
 from __future__ import annotations
 
+import importlib
 import os
 import subprocess
 import sys
@@ -55,7 +59,20 @@ def main() -> int:
         fail(f"oracle_sql() names without a queries() entry: {missing_oracle}")
     print(f"1. contract OK: {len(qs)} queries, {len(osql)} oracles")
 
-    # 2. every test module collects
+    # 2. the timing entry point and every tool import
+    modules = ["bench"] + [
+        f"tools.{name[:-3]}"
+        for name in sorted(os.listdir(os.path.join(REPO, "tools")))
+        if name.endswith(".py")
+    ]
+    for module in modules:
+        try:
+            importlib.import_module(module)
+        except Exception as ex:  # noqa: BLE001 - report any import death
+            fail(f"{module} does not import: {type(ex).__name__}: {ex}")
+    print(f"2. tools OK: {len(modules)} modules import")
+
+    # 3. every test module collects
     proc = subprocess.run(
         [sys.executable, "-m", "pytest", "--collect-only", "-q", "tests/"],
         cwd=REPO,
@@ -65,11 +82,11 @@ def main() -> int:
     if proc.returncode != 0:
         tail = "\n".join(proc.stdout.splitlines()[-15:])
         fail(f"pytest collection failed (rc={proc.returncode}):\n{tail}")
-    print(f"2. collection OK: {proc.stdout.splitlines()[-1].strip()}")
+    print(f"3. collection OK: {proc.stdout.splitlines()[-1].strip()}")
 
-    # 3. the driver smoke
+    # 4. the driver smoke
     if fast:
-        print("3. smoke SKIPPED (--fast)")
+        print("4. smoke SKIPPED (--fast)")
     else:
         from pyspark.sql import SparkSession
 
@@ -85,7 +102,7 @@ def main() -> int:
             spark.stop()
         if len(rows) != 6:
             fail(f"entry() smoke returned {len(rows)} rows, expected 6")
-        print("3. smoke OK: entry() -> 6 rows")
+        print("4. smoke OK: entry() -> 6 rows")
 
     print("CLOSING CHECK PASSED — safe to snapshot")
     return 0
